@@ -132,7 +132,9 @@ object ScaleProbe {
     // 6.8 — the round's storm class) read six more borderliners at
     // 1.51-2.04 s; the ratchet admits on ANY qualifying reading
     "q_bt_step", "q_cross_elasticity", "q_dedup_fuzzy",
-    "q_fleiss_kappa", "q_littles_law", "q_range_bounds")
+    "q_fleiss_kappa", "q_littles_law", "q_range_bounds",
+    // the r19 8-cpu control bench read one more borderliner at 1.56 s
+    "q_session_ctr")
 
   /** The steepest 10x exponents of BENCH_SCALE r10/r11 — the subset
     * deeper levels re-probe (carrying all 15 to 30x would triple the

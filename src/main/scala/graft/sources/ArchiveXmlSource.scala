@@ -4,6 +4,8 @@ import java.io.{BufferedInputStream, InputStream}
 import java.nio.charset.StandardCharsets
 import java.util.Locale
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.commons.compress.archivers.tar.TarArchiveInputStream
 import org.apache.commons.compress.compressors.gzip.GzipCompressorInputStream
 import org.apache.spark.SerializableWritable
@@ -171,30 +173,27 @@ object ArchiveXmlSource {
     * shape as plain-file conversion (include/exclude pruning honored),
     * plus `file_info` (member name/size/archive) when requested —
     * mirroring the reference's zip/tar entry metadata
-    * (convert_xml_to_parquet.py:310-314,339-347). `keepMember = true`
-    * additionally retains a `__member` routing column for per-member
-    * sinks (XmlToParquetJob.convert).
+    * (convert_xml_to_parquet.py:310-314,339-347). `route = true`
+    * additionally retains the archive path and the member name as the
+    * routing columns of [[XmlToParquetJob.convert]]'s batch write.
     */
   def read(spark: SparkSession, xsdContent: String, paths: Seq[String],
       cfg: Config = Config(), rowTag: Option[String] = None,
-      keepMember: Boolean = false): DataFrame = {
+      route: Boolean = false): DataFrame = {
     val (root, contentType) = XmlToParquetJob.compileXsd(xsdContent, rowTag)
     val members = readMembers(spark, paths, cfg.strictArchives)
-    val opts = new java.util.HashMap[String, String]()
-    opts.put("attributePrefix", "_")
-    opts.put("ignoreNamespace", "true")
-    opts.put("nullValue", "")
-    opts.put("mode", "PERMISSIVE")
+    val passThrough =
+      (if (cfg.fileInfo) Seq("file_info" ->
+        struct(col("name"), col("size"), col("archive")))
+      else Nil) ++
+      (if (route) Seq(XmlToParquetJob.Route -> col("archive"),
+        XmlToParquetJob.Member -> col("name"))
+      else Nil)
     val parsed = members
-      .withColumn("__doc", from_xml(col("xml"), contentType, opts))
-      .select(Seq(col("__doc.*")) ++
-        (if (cfg.fileInfo)
-          Seq(struct(col("name"), col("size"), col("archive")).as("file_info"))
-        else Nil) ++
-        (if (keepMember) Seq(col("name").as("__member")) else Nil): _*)
-    val passThrough = (if (cfg.fileInfo) Seq("file_info") else Nil) ++
-      (if (keepMember) Seq("__member") else Nil)
+      .withColumn("__doc", from_xml(col("xml"), contentType,
+        XmlToParquetJob.ParseOptions.asJava))
+      .select(col("__doc.*") +: passThrough.map { case (n, c) => c.as(n) }: _*)
     XmlShaper.shapeDocument(parsed, root, cfg.includes, cfg.excludes,
-      passThrough)
+      passThrough.map(_._1))
   }
 }

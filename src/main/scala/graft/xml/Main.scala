@@ -159,18 +159,19 @@ object Main {
       (f, e) => logLine(s"error converting $f: ${e.getMessage}")
     // Reference semantics: explicit -t writes everything there; without
     // it each output lands next to its input
-    // (convert_xml_to_parquet.py:505-508).
-    val written = args.target match {
-      case Some(t) =>
-        XmlToParquetJob.convert(spark, xsdContent, args.inputs, t, cfg,
-          deleteSource = args.delete, onError = onError)
+    // (convert_xml_to_parquet.py:505-508) — one convert batch per input
+    // directory, in order of first appearance.
+    val batches = args.target match {
+      case Some(t) => Seq(t -> args.inputs)
       case None =>
-        args.inputs.flatMap { in =>
-          val dir = Option(new Path(in).getParent).map(_.toString)
-            .getOrElse(".")
-          XmlToParquetJob.convert(spark, xsdContent, Seq(in), dir, cfg,
-            deleteSource = args.delete, onError = onError)
-        }
+        def dir(in: String) =
+          Option(new Path(in).getParent).map(_.toString).getOrElse(".")
+        val byDir = args.inputs.groupBy(dir)
+        args.inputs.map(dir).distinct.map(d => d -> byDir(d))
+    }
+    val written = batches.flatMap { case (dir, ins) =>
+      XmlToParquetJob.convert(spark, xsdContent, ins, dir, cfg,
+        deleteSource = args.delete, onError = onError)
     }
     written.foreach(o => logLine(s"wrote $o"))
     written

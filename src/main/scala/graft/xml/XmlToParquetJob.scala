@@ -1,7 +1,10 @@
 package graft.xml
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.net.URI
+
+import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.execution.datasources.xml.XSDToSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -22,14 +25,13 @@ import org.apache.spark.sql.types.StructType
   *   - file-info metadata from Spark's hidden `_metadata` struct
   *     (reference: convert_xml_to_parquet.py:228-229,386-393);
   *   - one Parquet output per input XML (reference sink K1, naming
-  *     `<base>.xml.parquet`, convert_xml_to_parquet.py:397,489-508) via a
-  *     metadata-only driver loop — the per-file work itself runs in
-  *     executor tasks, and an archive's members are all written by ONE
-  *     `partitionBy` job + renames, not a job per member. For
-  *     fleet-scale corpora `convertPartitioned` writes the whole corpus
-  *     in ONE job partitioned by source file, which is the shape that
-  *     survives 100 TB (no per-file job scheduling overhead;
-  *     files >> cores parallelism).
+  *     `<base>.xml.parquet`, convert_xml_to_parquet.py:397,489-508)
+  *     written by a CONSTANT number of Spark jobs per `convert` call: one
+  *     `partitionBy` write for all plain/gzip inputs, one for all
+  *     archives, then driver-side renames of the partition directories —
+  *     no per-file job scheduling, so the reference's 10,000-file batch
+  *     is two writes, not 10,000. `convertPartitioned` is the plain
+  *     write alone, left in Spark's partition layout.
   */
 object XmlToParquetJob {
 
@@ -99,30 +101,56 @@ object XmlToParquetJob {
     }
   }
 
+  /** Parse options shared by the file reader and the archive members'
+    * `from_xml`: attributes as `_<attr>` (renamed by [[XmlShaper]]),
+    * namespaces ignored, empty text as null, malformed records isolated.
+    */
+  private[graft] val ParseOptions: Map[String, String] = Map(
+    "attributePrefix" -> "_",
+    "ignoreNamespace" -> "true",
+    "nullValue" -> "",
+    "mode" -> "PERMISSIVE")
+
+  /** File name of a `_metadata.file_path` URI, decoded with URI
+    * semantics (`my%20file%2B.xml` -> `my file+.xml`); `url_decode`
+    * would also turn a literal `+` into a space.
+    */
+  private val fileName = udf((uri: String) => new Path(new URI(uri)).getName)
+
+  /** The one file reader: parse `paths` with the XSD-fixed schema, shape
+    * each document, and carry `extra` columns (computed from the raw
+    * rows, so the hidden `_metadata` struct is in scope) through the
+    * shaping. `file_info` comes first when configured; its `name` is the
+    * decoded file name, as the reference's `os.path.basename` reports it.
+    */
+  private def readFiles(spark: SparkSession, xsdContent: String,
+      paths: Seq[String], cfg: Config, rowTag: Option[String],
+      extra: Seq[(String, Column)]): DataFrame = {
+    val (root, contentType) = compileXsd(xsdContent, rowTag)
+    val parsed = spark.read.format("xml")
+      .option("rowTag", root)
+      .options(ParseOptions)
+      .schema(contentType)
+      .load(paths: _*)
+    val fileInfo =
+      if (cfg.fileInfo) Seq("file_info" -> struct(
+        fileName(col("_metadata.file_path")).as("name"),
+        col("_metadata.file_size").as("size"),
+        date_format(col("_metadata.file_modification_time"),
+          XmlShaper.DateFormat).as("mtime")))
+      else Nil
+    val passThrough = fileInfo ++ extra
+    XmlShaper.shapeDocument(
+      parsed.select(col("*") +: passThrough.map { case (n, c) => c.as(n) }: _*),
+      root, cfg.includes, cfg.excludes, passThrough.map(_._1))
+  }
+
   /** Read + shape XML documents: one row per document, a single
     * root-named struct column (plus `file_info` when configured).
     */
   def read(spark: SparkSession, xsdContent: String, paths: Seq[String],
-      cfg: Config = Config(), rowTag: Option[String] = None): DataFrame = {
-    val (root, contentType) = compileXsd(xsdContent, rowTag)
-    var df = spark.read.format("xml")
-      .option("rowTag", root)
-      .option("attributePrefix", "_")
-      .option("ignoreNamespace", "true")
-      .option("nullValue", "")
-      .option("mode", "PERMISSIVE")
-      .schema(contentType)
-      .load(paths: _*)
-    val passThrough = if (cfg.fileInfo) {
-      df = df.withColumn("file_info", struct(
-        regexp_extract(col("_metadata.file_path"), "([^/]+)$", 1).as("name"),
-        col("_metadata.file_size").as("size"),
-        date_format(col("_metadata.file_modification_time"),
-          XmlShaper.DateFormat).as("mtime")))
-      Seq("file_info")
-    } else Nil
-    XmlShaper.shapeDocument(df, root, cfg.includes, cfg.excludes, passThrough)
-  }
+      cfg: Config = Config(), rowTag: Option[String] = None): DataFrame =
+    readFiles(spark, xsdContent, paths, cfg, rowTag, Nil)
 
   /** Reference base naming: strip `.gz`, `.tar`, `.zip`, `.xml` suffixes
     * in that order (convert_xml_to_parquet.py:489-505; `.tgz` added as
@@ -143,23 +171,41 @@ object XmlToParquetJob {
     l.endsWith(".zip") || l.endsWith(".tar.gz") || l.endsWith(".tgz")
   }
 
+  /** Routing columns of a batch write: the input's index in its batch
+    * and, for archives, the member name.
+    */
+  private[graft] val Route = "__route"
+  private[graft] val Member = "__member"
+
   /** Exact reference parity sink: one Parquet output per input XML file,
     * named `<base>.xml.parquet`; archive inputs (zip / tar.gz) emit one
     * Parquet PER MEMBER named `<base>.<member>.parquet`
-    * (convert_xml_to_parquet.py:318,351). An archive is written in ONE
-    * Spark job — `partitionBy` on the member routing column, then a
-    * metadata-only rename of each partition directory to the reference
-    * name — so driver work is O(1) jobs per input regardless of member
-    * count. Returns the written output paths.
+    * (convert_xml_to_parquet.py:318,351). Returns the written output
+    * paths in worklist order.
+    *
+    * Job shape: the plain/gzip inputs are ONE batch — one read routed by
+    * source file, `repartition` on the route so each input lands in one
+    * task, one `partitionBy` write into a staging directory under
+    * `targetDir` — and the archives are another, routed by archive and
+    * member. After both writes, one pass in worklist order renames each
+    * partition directory to its reference name (a metadata-only driver
+    * op), so a call costs the same few Spark jobs for one input or ten
+    * thousand, and every output holds exactly one data file. When two
+    * inputs map to the same output name the later one in worklist order
+    * wins, plain or archive. An input that parses to no documents (an
+    * empty file, no root element) still gets a zero-row output with the
+    * fixed schema, copied from one empty write.
     *
     * Per-file failure isolation mirrors the reference's error_callback
-    * (convert_xml_to_parquet.py:510-524, :537-539): a file that fails to
-    * convert is reported through `onError` (default: stderr) and the
-    * worklist CONTINUES — one corrupt document in a 10,000-file batch
-    * costs one output, not the batch. Failed inputs are never deleted.
+    * (convert_xml_to_parquet.py:510-524, :537-539): when a batch write
+    * throws, each of its inputs is retried alone through the same batch
+    * path, and only the inputs that still fail (or whose renames fail)
+    * are reported through `onError` (default: stderr) — one corrupt
+    * document in a 10,000-file batch costs one output, not the batch.
+    * Failed inputs are never deleted.
     *
     * `deleteSource` mirrors the reference's `-d` flag
-    * (convert_xml_to_parquet.py:407-408): the input is deleted only
+    * (convert_xml_to_parquet.py:407-408): an input is deleted only
     * after its outputs are successfully written.
     */
   def convert(spark: SparkSession, xsdContent: String, inputs: Seq[String],
@@ -172,7 +218,7 @@ object XmlToParquetJob {
     val hconf = spark.sparkContext.hadoopConfiguration
     // The XSD must compile for ANY file to convert — a broken schema is
     // a whole-run error, not a per-file one, and fails fast here before
-    // the worklist loop swallows it once per input.
+    // the batch isolation swallows it once per input.
     compileXsd(xsdContent, rowTag)
     // glob-expand + dedup, the reference's worklist build
     // (convert_xml_to_parquet.py:464-475)
@@ -182,81 +228,128 @@ object XmlToParquetJob {
       Option(fs.globStatus(p)).map(_.toSeq.map(_.getPath.toString))
         .getOrElse(Seq(in))
     }.distinct
-    files.flatMap { f =>
-      try convertOne(spark, xsdContent, f, targetDir, cfg, rowTag,
-        deleteSource, hconf)
-      catch { case scala.util.control.NonFatal(e) => onError(f, e); Nil }
-    }
-  }
-
-  /** One worklist entry: convert a single (already glob-expanded) input
-    * and return its output paths. Failures propagate to [[convert]]'s
-    * per-file isolation boundary.
-    */
-  private def convertOne(spark: SparkSession, xsdContent: String, f: String,
-      targetDir: String, cfg: Config, rowTag: Option[String],
-      deleteSource: Boolean,
-      hconf: org.apache.hadoop.conf.Configuration): Seq[String] = {
-      val outs: Seq[String] =
-        if (isArchive(f)) {
-          val base = outputBase(f)
-          val shaped = graft.sources.ArchiveXmlSource
-            .read(spark, xsdContent, Seq(f), cfg, rowTag, keepMember = true)
-          // one job: route rows to per-member partition dirs (repartition
-          // on the member key so each member lands as one file), then
-          // rename dirs to the reference naming
-          val staging = new Path(targetDir,
-            s".graft_stage_${base}_${java.util.UUID.randomUUID.toString.take(8)}")
-          shaped.repartition(col("__member"))
-            .write.mode("overwrite").partitionBy("__member")
-            .parquet(staging.toString)
-          val fs = staging.getFileSystem(hconf)
-          try {
-            fs.listStatus(staging).toSeq
-              .filter(_.getPath.getName.startsWith("__member="))
-              .map { st =>
-                val m = org.apache.spark.sql.catalyst.catalog
-                  .ExternalCatalogUtils
-                  .unescapePathName(st.getPath.getName.stripPrefix("__member="))
-                val dest = new Path(targetDir, s"$base.$m.parquet")
-                fs.delete(dest, true)
-                fs.rename(st.getPath, dest)
-                dest.toString
-              }.sorted
-          } finally fs.delete(staging, true)
-        } else {
-          val out = s"$targetDir/${outputName(f)}"
-          read(spark, xsdContent, Seq(f), cfg, rowTag)
-            .coalesce(1).write.mode("overwrite").parquet(out)
-          Seq(out)
-        }
-      if (deleteSource) {
-        val p = new Path(f)
-        p.getFileSystem(hconf).delete(p, false)
+    val (archives, plain) = files.partition(isArchive)
+    val staging = new Path(targetDir,
+      s".graft_stage_${java.util.UUID.randomUUID.toString.take(8)}")
+    val fs = staging.getFileSystem(hconf)
+    val batchIds = Iterator.from(0)
+    def isolated(batch: Seq[String]): Map[String, Seq[(Path, String)]] =
+      try stageBatch(spark, xsdContent, batch,
+        new Path(staging, batchIds.next().toString), cfg, rowTag)
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          if (batch.size == 1) { onError(batch.head, e); Map.empty }
+          else batch.flatMap(f => isolated(Seq(f))).toMap
       }
-      outs
+    try {
+      val staged = Seq(plain, archives).filter(_.nonEmpty)
+        .flatMap(isolated).toMap
+      // one rename pass over both batches in worklist order: a later
+      // input overwrites an earlier one's output of the same name
+      files.filter(staged.contains).flatMap { f =>
+        try {
+          val outs = staged(f).map { case (src, name) =>
+            val dest = new Path(targetDir, name)
+            fs.delete(dest, true)
+            if (!fs.rename(src, dest))
+              throw new java.io.IOException(s"cannot rename $src to $dest")
+            dest.toString
+          }
+          if (deleteSource) {
+            val p = new Path(f)
+            p.getFileSystem(hconf).delete(p, false)
+          }
+          outs
+        } catch { case scala.util.control.NonFatal(e) => onError(f, e); Nil }
+      }
+    } finally fs.delete(staging, true)
   }
 
-  /** Fleet-scale variant: the whole corpus in one job, partitioned by
-    * source file name — per-file output directories without per-file job
-    * scheduling. Use this shape when files number in the millions.
+  /** One batch of [[convert]]: plain/gzip inputs or archives, never
+    * both. Runs the batch's single routed write into `staging` and
+    * returns, per input, each staged output directory with its
+    * reference name. Any failure throws, and [[convert]] isolates it.
+    */
+  private def stageBatch(spark: SparkSession, xsdContent: String,
+      files: Seq[String], staging: Path, cfg: Config,
+      rowTag: Option[String]): Map[String, Seq[(Path, String)]] = {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val archives = isArchive(files.head)
+    // The route is the input's index in `files`, so a partition directory
+    // is `__route=<i>` however long the input path is. Sources are
+    // matched to inputs as qualified Hadoop paths, never as strings:
+    // `_metadata.file_path` is a URI (`my%20file.xml`), the archive
+    // listing's path and the glob-expanded inputs are not. Each input is
+    // qualified by its own file system, which need not be the target's.
+    val index = spark.sparkContext.broadcast(files.zipWithIndex.map {
+      case (f, i) =>
+        val p = new Path(f)
+        p.getFileSystem(hconf).makeQualified(p).toString -> i
+    }.toMap)
+    val route = udf { (source: String) =>
+      val p = if (archives) new Path(source) else new Path(new URI(source))
+      index.value.getOrElse(p.toString, -1)
+    }
+    val (shaped, keys) =
+      if (archives)
+        (graft.sources.ArchiveXmlSource.read(spark, xsdContent, files, cfg,
+          rowTag, route = true).withColumn(Route, route(col(Route))),
+          Seq(Route, Member))
+      else
+        (readFiles(spark, xsdContent, files, cfg, rowTag,
+          Seq(Route -> route(col("_metadata.file_path")))), Seq(Route))
+    val fs = staging.getFileSystem(hconf)
+    // partition directory name -> decoded partition value
+    def value(dir: Path, key: String): String = ExternalCatalogUtils
+      .unescapePathName(dir.getName.stripPrefix(s"$key="))
+    def partitions(dir: Path, key: String): Seq[Path] =
+      fs.listStatus(dir).toSeq.map(_.getPath)
+        .filter(_.getName.startsWith(s"$key="))
+    try {
+      // one write: repartition on the route so each input (each member)
+      // lands in one task and so as one data file
+      shaped.repartition(keys.map(col): _*)
+        .write.partitionBy(keys: _*).parquet(staging.toString)
+      val routed = partitions(staging, Route)
+        .map(dir => value(dir, Route).toInt -> dir).toMap
+      // a partition no input claims would be dropped with the staging
+      // directory: fail loudly instead
+      if (!routed.keySet.subsetOf(files.indices.toSet))
+        throw new IllegalStateException(
+          s"rows of a source matching no input of $files were written")
+      lazy val empty = {
+        val dir = new Path(staging, "__empty")
+        shaped.drop(keys: _*).limit(0).write.parquet(dir.toString)
+        dir
+      }
+      files.zipWithIndex.map { case (f, i) =>
+        val outs =
+          if (archives) routed.get(i).toSeq.flatMap(partitions(_, Member))
+            .map(m => m -> s"${outputBase(f)}.${value(m, Member)}.parquet")
+            .sortBy(_._2)
+          else routed.get(i) match {
+            case Some(dir) => Seq(dir -> outputName(f))
+            case None =>
+              // parsed to no documents: still one output per input,
+              // zero rows under the fixed schema
+              val copy = new Path(staging, s"__empty$i")
+              FileUtil.copy(fs, empty, fs, copy, false, hconf)
+              Seq(copy -> outputName(f))
+          }
+        f -> outs
+      }.toMap
+    } finally index.destroy()
+  }
+
+  /** The whole corpus in one write left in Spark's partition layout,
+    * partitioned by source file name (`source_file`): the shape of
+    * [[convert]]'s plain batch without its staging, reference names,
+    * zero-row outputs or failure isolation.
     */
   def convertPartitioned(spark: SparkSession, xsdContent: String,
       inputs: Seq[String], targetDir: String, cfg: Config = Config(),
-      rowTag: Option[String] = None): Unit = {
-    val (root, contentType) = compileXsd(xsdContent, rowTag)
-    val df = spark.read.format("xml")
-      .option("rowTag", root)
-      .option("attributePrefix", "_")
-      .option("ignoreNamespace", "true")
-      .option("nullValue", "")
-      .option("mode", "PERMISSIVE")
-      .schema(contentType)
-      .load(inputs: _*)
-      .withColumn("source_file",
-        regexp_extract(col("_metadata.file_path"), "([^/]+)$", 1))
-    XmlShaper.shapeDocument(df, root, cfg.includes, cfg.excludes,
-        Seq("source_file"))
+      rowTag: Option[String] = None): Unit =
+    readFiles(spark, xsdContent, inputs, cfg, rowTag,
+      Seq("source_file" -> fileName(col("_metadata.file_path"))))
       .write.mode("overwrite").partitionBy("source_file").parquet(targetDir)
-  }
 }

@@ -241,23 +241,218 @@ class XmlConversionSpec extends AnyFunSuite {
       "failed source must never be deleted")
   }
 
-  test("archive convert runs one write job regardless of member count") {
+  /** Spark jobs started while `body` runs; the listener bus is drained
+    * before and after, so the count is exact.
+    */
+  private def jobsOf(body: => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.ListenerBusDrain.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  private def bookOrder = XmlQueries.resourceText("bookOrder.xml")
+
+  private def writeGz(p: java.nio.file.Path, text: String): Unit = {
+    val out = new java.util.zip.GZIPOutputStream(
+      java.nio.file.Files.newOutputStream(p))
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
+  /** A directory of `plain` plain files, `gz` gzip files and `archives`
+    * archives (alternating the zip and tar.gz fixtures).
+    */
+  private def corpus(plain: Int, gz: Int, archives: Int): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory("batch_src")
+    for (i <- 0 until plain)
+      java.nio.file.Files.writeString(dir.resolve(s"p$i.xml"), bookOrder)
+    for (i <- 0 until gz) writeGz(dir.resolve(s"g$i.xml.gz"), bookOrder)
+    for (i <- 0 until archives) {
+      val fixture = if (i % 2 == 0) "books.zip" else "books.tar.gz"
+      java.nio.file.Files.copy(XmlQueries.fixtureDir.resolve(fixture),
+        dir.resolve(s"a$i.${fixture.stripPrefix("books.")}"))
+    }
+    dir
+  }
+
+  private def dataFiles(out: String): Seq[String] =
+    new java.io.File(out).listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet")).toSeq
+
+  test("convert runs the same number of Spark jobs for 8 inputs as for 2") {
+    def jobs(plain: Int, gz: Int, archives: Int): Int = {
+      val src = corpus(plain, gz, archives)
+      val target = java.nio.file.Files.createTempDirectory("batch_out")
+      var failed = Seq.empty[String]
+      var written = Seq.empty[String]
+      val n = jobsOf {
+        written = XmlToParquetJob.convert(spark, XmlQueries.xsd,
+          Seq(s"$src/*"), target.toString, onError = (f, _) => failed :+= f)
+      }
+      assert(failed.isEmpty, s"failures: $failed")
+      // two members per archive fixture
+      assert(written.size == plain + gz + 2 * archives, s"wrote $written")
+      written.foreach(o => assert(dataFiles(o).size == 1, s"$o"))
+      n
+    }
+    val small = jobs(plain = 1, gz = 0, archives = 1)
+    val large = jobs(plain = 3, gz = 3, archives = 2)
+    // the write jobs are per batch (plain/gzip, archives), not per input
+    // or member — renames are driver-side metadata ops
+    assert(large == small, s"1+1 inputs ran $small jobs, 6+2 ran $large")
+  }
+
+  test("archive convert runs one write job regardless of member count") {
     val target = java.nio.file.Files.createTempDirectory("arch_one").toString
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsOf {
       XmlToParquetJob.convert(spark, XmlQueries.xsd,
         Seq(XmlQueries.fixtureDir.resolve("books.zip").toString), target)
-      Thread.sleep(1000) // listener events post asynchronously
-    } finally spark.sparkContext.removeSparkListener(listener)
-    // one partitionBy write job (+ at most one listing job), NOT a job
-    // per member — the renames are driver-side metadata ops
-    assert(jobs.get() <= 2, s"expected a single write job, saw ${jobs.get()}")
+    }
+    // one partitionBy write job (+ at most one shuffle-stage job), NOT a
+    // job per member — the renames are driver-side metadata ops
+    assert(jobs <= 2, s"expected a single write job, saw $jobs")
+  }
+
+  test("an input with no documents still gets a zero-row output") {
+    val src = java.nio.file.Files.createTempDirectory("zero_src")
+    java.nio.file.Files.writeString(src.resolve("good.xml"), bookOrder)
+    java.nio.file.Files.writeString(src.resolve("empty.xml"), "")
+    java.nio.file.Files.writeString(src.resolve("noroot.xml"),
+      "<?xml version=\"1.0\"?>\n<invoice><total>3</total></invoice>\n")
+    val target = java.nio.file.Files.createTempDirectory("zero_out").toString
+    val written = XmlToParquetJob.convert(spark, XmlQueries.xsd,
+      Seq("good.xml", "empty.xml", "noroot.xml").map(n => s"$src/$n"),
+      target, Config(fileInfo = true))
+    assert(written == Seq("good", "empty", "noroot")
+      .map(b => s"$target/$b.xml.parquet"), s"wrote $written")
+    val good = spark.read.parquet(written.head)
+    assert(good.count() == 1)
+    for (out <- written.tail) {
+      val back = spark.read.parquet(out)
+      assert(back.count() == 0, out)
+      assert(back.schema == good.schema, out)
+      assert(dataFiles(out).size == 1, out)
+    }
+  }
+
+  test("two inputs with one output name: the later in worklist order wins") {
+    val root = java.nio.file.Files.createTempDirectory("dup_src")
+    val a = root.resolve("a/good.xml")
+    val b = root.resolve("b/good.xml")
+    java.nio.file.Files.createDirectories(a.getParent)
+    java.nio.file.Files.createDirectories(b.getParent)
+    java.nio.file.Files.writeString(a, bookOrder)
+    java.nio.file.Files.writeString(b,
+      bookOrder.replace("Ada Lovelace", "Grace Hopper"))
+    def shipTo(order: Seq[java.nio.file.Path]): String = {
+      val target = java.nio.file.Files.createTempDirectory("dup_out").toString
+      val written = XmlToParquetJob.convert(spark, XmlQueries.xsd,
+        order.map(_.toString), target)
+      val out = s"$target/good.xml.parquet"
+      assert(written == Seq(out, out), s"wrote $written")
+      assert(dataFiles(out).size == 1)
+      spark.read.parquet(out).select("bookOrder.shipTo.name")
+        .collect().map(_.getString(0)).mkString(",")
+    }
+    assert(shipTo(Seq(a, b)) == "Grace Hopper")
+    assert(shipTo(Seq(b, a)) == "Ada Lovelace")
+  }
+
+  test("names with a space, % and + keep their name in outputs and " +
+      "file_info") {
+    val src = java.nio.file.Files.createTempDirectory("name_src")
+    val name = "my file%+.xml"
+    java.nio.file.Files.writeString(src.resolve(name), bookOrder)
+    writeGz(src.resolve("gz file.xml.gz"), bookOrder)
+    java.nio.file.Files.copy(XmlQueries.fixtureDir.resolve("books.zip"),
+      src.resolve("my books%.zip"))
+    val target = java.nio.file.Files.createTempDirectory("name_out").toString
+    val written = XmlToParquetJob.convert(spark, XmlQueries.xsd,
+      Seq(s"$src/*"), target, Config(fileInfo = true))
+    assert(written.sorted == Seq("gz file.xml.parquet",
+      "my books%.order1.xml.parquet", "my books%.order2.xml.parquet",
+      "my file%+.xml.parquet").map(n => s"$target/$n"), s"wrote $written")
+    val names = written.sorted.map(o => spark.read.parquet(o)
+      .select("file_info.name").collect().map(_.getString(0)).mkString(","))
+    // the reference's os.path.basename, not the URI-encoded path
+    assert(names == Seq("gz file.xml.gz", "order1.xml", "order2.xml", name))
+    val read = XmlToParquetJob.read(spark, XmlQueries.xsd,
+      Seq(src.resolve(name).toString), Config(fileInfo = true))
+    assert(read.select("file_info.name").head().getString(0) == name)
+  }
+
+  test("a plain input and an archive member with one output name: the " +
+      "later in worklist order wins") {
+    val src = java.nio.file.Files.createTempDirectory("kind_src")
+    // plain `books.order1.xml` and member order1.xml of `books.zip` both
+    // map to books.order1.xml.parquet
+    val plain = src.resolve("books.order1.xml")
+    java.nio.file.Files.writeString(plain,
+      bookOrder.replace("Ada Lovelace", "Grace Hopper"))
+    val zip = src.resolve("books.zip")
+    java.nio.file.Files.copy(XmlQueries.fixtureDir.resolve("books.zip"), zip)
+    def shipTo(order: Seq[java.nio.file.Path]): String = {
+      val target = java.nio.file.Files.createTempDirectory("kind_out").toString
+      XmlToParquetJob.convert(spark, XmlQueries.xsd, order.map(_.toString),
+        target)
+      val out = s"$target/books.order1.xml.parquet"
+      assert(dataFiles(out).size == 1)
+      spark.read.parquet(out).select("bookOrder.shipTo.name")
+        .collect().map(_.getString(0)).mkString(",")
+    }
+    assert(shipTo(Seq(zip, plain)) == "Grace Hopper")
+    assert(shipTo(Seq(plain, zip)) == "Ada Lovelace")
+  }
+
+  test("inputs whose paths exceed a 255-byte file name still convert") {
+    val root = java.nio.file.Files.createTempDirectory("long_src")
+    val dir = root.resolve("d" * 120).resolve("e" * 120)
+    java.nio.file.Files.createDirectories(dir)
+    val plain = dir.resolve("long name.xml")
+    java.nio.file.Files.writeString(plain, bookOrder)
+    val zip = dir.resolve("books.zip")
+    java.nio.file.Files.copy(XmlQueries.fixtureDir.resolve("books.zip"), zip)
+    assert(plain.toString.length > 255)
+    val target = java.nio.file.Files.createTempDirectory("long_out").toString
+    var failed = Seq.empty[String]
+    val written = XmlToParquetJob.convert(spark, XmlQueries.xsd,
+      Seq(plain, zip).map(_.toString), target,
+      onError = (f, _) => failed :+= f)
+    assert(failed.isEmpty, s"failures: $failed")
+    assert(written == Seq("long name.xml.parquet", "books.order1.xml.parquet",
+      "books.order2.xml.parquet").map(n => s"$target/$n"), s"wrote $written")
+    written.foreach(o => assert(spark.read.parquet(o).count() == 1, o))
+  }
+
+  test("inputs on one file system convert into a target on another") {
+    // the local disk under a second scheme stands in for a second file
+    // system: input paths are `file:`, the target is `otherfs:`
+    spark.sparkContext.hadoopConfiguration.set("fs.otherfs.impl",
+      classOf[OtherSchemeFileSystem].getName)
+    val src = corpus(plain = 1, gz = 1, archives = 1)
+    val target = java.nio.file.Files.createTempDirectory("otherfs_out")
+    var failed = Seq.empty[String]
+    val written = XmlToParquetJob.convert(spark, XmlQueries.xsd,
+      Seq(s"$src/*"), s"otherfs://$target", onError = (f, _) => failed :+= f)
+    assert(failed.isEmpty, s"failures: $failed")
+    assert(written.map(o => new org.apache.hadoop.fs.Path(o).getName).sorted ==
+      Seq("a0.order1.xml.parquet", "a0.order2.xml.parquet", "g0.xml.parquet",
+        "p0.xml.parquet"), s"wrote $written")
+    assert(written.forall(_.startsWith("otherfs:")), s"wrote $written")
+    for (o <- written) {
+      val local = o.stripPrefix("otherfs:")
+      assert(dataFiles(local).size == 1, o)
+      assert(spark.read.parquet(local).count() == 1, o)
+    }
   }
 
   test("CLI main converts with the reference flag surface") {
@@ -285,6 +480,25 @@ class XmlConversionSpec extends AnyFunSuite {
     assert(!spark.sparkContext.isStopped)
   }
 
+  test("CLI without -t converts each directory in one batch, beside " +
+      "its inputs") {
+    val srcDir = java.nio.file.Files.createTempDirectory("cli_dir")
+    val xsdFile = srcDir.resolve("bookOrder.xsd")
+    java.nio.file.Files.writeString(xsdFile, XmlQueries.xsd)
+    val ins = Seq("one.xml", "two.xml").map { n =>
+      java.nio.file.Files.writeString(srcDir.resolve(n), bookOrder)
+      srcDir.resolve(n).toString
+    }
+    def cli(inputs: Seq[String]): Int = jobsOf {
+      Main.main(Array("-x", xsdFile.toString) ++ inputs)
+    }
+    val jobsTwo = cli(ins)
+    for (b <- Seq("one", "two"))
+      assert(spark.read.parquet(s"$srcDir/$b.xml.parquet").count() == 1)
+    // one input in the same directory costs the same jobs as both
+    assert(cli(ins.take(1)) == jobsTwo)
+  }
+
   test("CLI flag parser matches the reference argument grammar") {
     val a = Main.parse(List("-x", "s.xsd", "-p", "/a,/b", "-e", "/c",
       "-m", "4", "-d", "-f", "-b", "1024", "-v", "INFO", "in1.xml",
@@ -308,4 +522,12 @@ class XmlConversionSpec extends AnyFunSuite {
     assert(Main.targetError(Some(plainFile.toString))
       .exists(_.contains("not a directory")))
   }
+}
+
+/** The local file system under a scheme of its own (`otherfs:`), a
+  * second file system for tests that need one.
+  */
+class OtherSchemeFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("otherfs:///")
+  override def getScheme: String = "otherfs"
 }

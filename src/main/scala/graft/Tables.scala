@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType,
-  TimestampNTZType, TimestampType}
+  StructType, TimestampNTZType, TimestampType}
 
 /** Table loaders for the driver test data (`TESTDATA.md`): one parquet per
   * table under the scale-factor directory passed to each query.
@@ -16,7 +16,7 @@ object Tables {
       // either (nanosAsLong so a nanos file surfaces as a long instead
       // of a vectorized-reader error, then normalize by actual type).
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      normalizeEventTs(spark.read.parquet(s"$dir/events.parquet"))
+      normalizeEventTs(read(spark, dir, name))
     } else if (name == "documents" || name == "embeddings") {
       // These two tables feed expression-heavy pipelines (shingling,
       // minhashing, quantized dot products) whose cost is per-row CPU,
@@ -26,11 +26,39 @@ object Tables {
       // scale files >> cores and the scan parallelizes naturally; this
       // repartition is then a cheap no-op-sized shuffle relative to the
       // compute it feeds.
-      spark.read.parquet(s"$dir/$name.parquet")
+      read(spark, dir, name)
         .repartition(spark.sparkContext.defaultParallelism)
     } else {
-      spark.read.parquet(s"$dir/$name.parquet")
+      read(spark, dir, name)
     }
+
+  /** Inferred schema of each source table, per session (its confs, e.g.
+    * nanosAsLong, shape the inference) and per (absolute path,
+    * `Advanced.fingerprint`), so a table rewritten in place is inferred
+    * again. Inferring a Parquet schema runs a Spark job on every call;
+    * reading with the schema given runs none. Only the
+    * schema is cached, never the DataFrame: every `table` call still
+    * builds a fresh relation with fresh expression IDs, so two reads of
+    * one table self-join. Sessions are held weakly: a dropped session
+    * takes its entries with it.
+    */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      java.util.Map[(String, String), StructType]]())
+
+  private def schemaOf(spark: SparkSession, dir: String, name: String)
+      : StructType = {
+    val path = s"$dir/$name.parquet"
+    val key = (new java.io.File(path).getAbsolutePath,
+      operators.Advanced.fingerprint(dir, name))
+    schemas
+      .computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap())
+      .computeIfAbsent(key, _ => spark.read.parquet(path).schema)
+  }
+
+  private def read(spark: SparkSession, dir: String, name: String)
+      : DataFrame =
+    spark.read.schema(schemaOf(spark, dir, name)).parquet(s"$dir/$name.parquet")
 
   /** Memoized capped row count for the truth-twin scale guards
     * (q_dedup_embedding, ngramPairs): the guard needs "is the table
@@ -110,9 +138,9 @@ object Tables {
     * a native timestamp, depending on the dataset generation) — the
     * schema a streaming file source must be given (see StreamingSmoke).
     */
-  def rawEventsSchema(spark: SparkSession, dir: String) = {
+  def rawEventsSchema(spark: SparkSession, dir: String): StructType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet").schema
+    schemaOf(spark, dir, "events")
   }
 
   /** Normalize the raw events `ts` column to session-TZ TimestampType at

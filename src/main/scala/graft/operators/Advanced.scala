@@ -53,12 +53,13 @@ object Advanced extends QueryModule {
       sum(xq * yq).as("sxy"))
   }
 
-  /** Cache key for the on-tmpfs bucketed copy of a source table: full
-    * path + per-file size/mtime, not just the directory basename — a
-    * regenerated-in-place parquet or two datasets sharing a basename
-    * must miss the cache, never silently reuse stale buckets.
+  /** Cache key for the on-tmpfs bucketed copy of a source table (and for
+    * its schema in `Tables`): full path + per-file size/mtime, not just
+    * the directory basename — a regenerated-in-place parquet or two
+    * datasets sharing a basename must miss the cache, never silently
+    * reuse stale buckets.
     */
-  private[operators] def fingerprint(d: String, name: String): String = {
+  private[graft] def fingerprint(d: String, name: String): String = {
     val src = new java.io.File(d, s"$name.parquet")
     val files =
       if (src.isDirectory) src.listFiles().sortBy(_.getName)

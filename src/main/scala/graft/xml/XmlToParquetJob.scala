@@ -30,8 +30,7 @@ import org.apache.spark.sql.types.StructType
   *     `partitionBy` write for all plain/gzip inputs, one for all
   *     archives, then driver-side renames of the partition directories —
   *     no per-file job scheduling, so the reference's 10,000-file batch
-  *     is two writes, not 10,000. `convertPartitioned` is the plain
-  *     write alone, left in Spark's partition layout.
+  *     is two writes, not 10,000.
   */
 object XmlToParquetJob {
 
@@ -340,16 +339,4 @@ object XmlToParquetJob {
       }.toMap
     } finally index.destroy()
   }
-
-  /** The whole corpus in one write left in Spark's partition layout,
-    * partitioned by source file name (`source_file`): the shape of
-    * [[convert]]'s plain batch without its staging, reference names,
-    * zero-row outputs or failure isolation.
-    */
-  def convertPartitioned(spark: SparkSession, xsdContent: String,
-      inputs: Seq[String], targetDir: String, cfg: Config = Config(),
-      rowTag: Option[String] = None): Unit =
-    readFiles(spark, xsdContent, inputs, cfg, rowTag,
-      Seq("source_file" -> fileName(col("_metadata.file_path"))))
-      .write.mode("overwrite").partitionBy("source_file").parquet(targetDir)
 }

@@ -1,0 +1,69 @@
+package graft
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** `Tables.table` infers each source table's schema once per session and
+  * table version, and still returns a fresh relation on every call.
+  */
+class TablesSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  private val sf = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    ListenerBusDrain.drain(sc)
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try { body; ListenerBusDrain.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("a second table() of one table launches no Spark job") {
+    for (name <- Seq("supplier", "events")) {
+      Tables.table(spark, sf, name)
+      assert(jobsDuring(Tables.table(spark, sf, name)) == 0, name)
+    }
+  }
+
+  test("a table rewritten in place is inferred again") {
+    val dir = Files.createTempDirectory("tables_schema").toString
+    spark.range(3).toDF("a").write.parquet(s"$dir/t.parquet")
+    assert(Tables.table(spark, dir, "t").columns.toSeq == Seq("a"))
+    spark.range(3).selectExpr("id AS a", "id * 2 AS b")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val t = Tables.table(spark, dir, "t")
+    assert(t.columns.toSeq == Seq("a", "b"))
+    assert(t.agg(sum("b")).head.getLong(0) == 6L)
+  }
+
+  test("two table() reads of one table join with each other") {
+    val a = Tables.table(spark, sf, "nation")
+    val b = Tables.table(spark, sf, "nation")
+    val pairs = a.join(b, a("n_regionkey") === b("n_regionkey"))
+      .select(a("n_name"), b("n_name")).count()
+    val expected = a.groupBy("n_regionkey").count().collect()
+      .map(r => r.getLong(1) * r.getLong(1)).sum
+    assert(expected > 25L)
+    assert(pairs == expected)
+  }
+}

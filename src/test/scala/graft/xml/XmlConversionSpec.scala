@@ -120,22 +120,6 @@ class XmlConversionSpec extends AnyFunSuite {
     assert(XmlToParquetJob.outputName(gz.toString) == "bookOrder.xml.parquet")
   }
 
-  test("convertPartitioned writes the corpus in one job, split by source") {
-    val srcDir = java.nio.file.Files.createTempDirectory("part_src")
-    for (n <- Seq("a.xml", "b.xml"))
-      java.nio.file.Files.writeString(srcDir.resolve(n),
-        XmlQueries.resourceText("bookOrder.xml"))
-    val target = java.nio.file.Files.createTempDirectory("part_out").toString
-    XmlToParquetJob.convertPartitioned(spark, XmlQueries.xsd,
-      Seq(s"$srcDir/*.xml"), target)
-    val back = spark.read.parquet(target)
-    assert(back.count() == 2)
-    val sources = back.select("source_file").collect()
-      .map(_.getString(0)).sorted
-    assert(sources.toSeq == Seq("a.xml", "b.xml"))
-    assert(back.columns.contains("bookOrder"))
-  }
-
   test("per-file parquet sink uses reference naming") {
     assert(XmlToParquetJob.outputName("/a/b/order.xml") == "order.xml.parquet")
     assert(XmlToParquetJob.outputName("x.xml.gz") == "x.xml.parquet")

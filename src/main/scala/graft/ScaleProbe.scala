@@ -361,21 +361,12 @@ object ScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val base = Session.sfDir
     val dstRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale")
     val levels = sys.env.getOrElse("SPARK_GRAFT_COPIES", "10,30,60")
       .split(",").map(_.trim.toInt).toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.network.timeout", "3600s")
-      .config("spark.local.dir", s"${graft.Scratch.root}/spark-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    plans.TopKPerKey.register(spark)
+    val spark = Session.local()
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     // Samples carry the OUTPUT ROW COUNT next to the wall time

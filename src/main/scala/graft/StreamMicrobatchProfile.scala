@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** One-shot diagnostic main (round 15, r14 ask #9): per-microbatch
@@ -19,17 +19,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   */
 object StreamMicrobatchProfile {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.network.timeout", "3600s")
-      .config("spark.local.dir", s"${graft.Scratch.root}/spark-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    plans.TopKPerKey.register(spark)
+    val sfDir = Session.sfDir
+    val spark = Session.local()
 
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     spark.streams.addListener(new StreamingQueryListener {
@@ -68,8 +59,8 @@ object StreamMicrobatchProfile {
       val dt = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[profile] $q total ${dt}%.2f s")
     }
-    // listener events are async — give the bus a moment to drain
-    Thread.sleep(2000)
+    // progress events reach the listener through the async listener bus
+    ListenerBusDrain.drain(spark.sparkContext)
     rows.forEach(r => println(r))
     spark.stop()
   }

@@ -1,30 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Bench: avoid netty idle-teardown spin mid-run
-      .config("spark.network.timeout", "3600s")
-      // shuffle/spill on tmpfs: the bench VM's block device stalls
-      // under load (idle iowait load ~6), and disk-backed shuffle files
-      // made identical queries 2-10x slower run-to-run
-      .config("spark.local.dir", s"${graft.Scratch.root}/spark-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Native planner surface (TopKPerKey + RowNumberTopKRewrite) is part
-    // of the library, so the official correctness run exercises it too —
+    // The factory's planner surface (TopKPerKey + RowNumberTopKRewrite):
     // window-spelled top-k queries plan through the bounded-heap operator
-    // here exactly as they do in the test sessions.
-    plans.TopKPerKey.register(spark)
+    // here exactly as they do in Bench and the test sessions.
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     // Optional subset for local iteration (driver never sets this):
     // SPARK_GRAFT_ONLY=q_a,q_b dumps just those queries.

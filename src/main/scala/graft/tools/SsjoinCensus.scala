@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility (round 15, r14 ask #5): measure the positional PPJoin
   * filter's candidate pruning on q_ssjoin_prefix — counts the
   * prefix-lemma-only candidate set, the positionally-filtered set,
@@ -14,17 +12,8 @@ import org.apache.spark.sql.SparkSession
   */
 object SsjoinCensus {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.network.timeout", "3600s")
-      .config("spark.local.dir", s"${graft.Scratch.root}/spark-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = graft.Session.sfDir
+    val spark = graft.Session.local()
     def timed(body: => Long): (Long, Double) = {
       val t0 = System.nanoTime()
       val n = body

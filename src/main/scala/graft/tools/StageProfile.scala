@@ -1,33 +1,26 @@
 package graft.tools
 
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility (optimization rounds): per-STAGE breakdown of individual
   * registered queries — wall duration, summed executor task time, input
   * bytes, shuffle read/write bytes, task count — attributed by stage
-  * callsite. The empirical half of guide §1: says WHICH operator of a
-  * slow query owns the time, where Profile.scala only gives the total.
+  * callsite, after the query's total. Says WHICH operator of a slow
+  * query owns the time. `SPARK_GRAFT_EXPLAIN=1` also prints each query's
+  * physical plan, with every operator's arguments inline, before it runs.
   *
   * {{{
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   *     sbt "runMain graft.tools.StageProfile q_graph_triangle"
+  *   SPARK_GRAFT_EXPLAIN=1 sbt "runMain graft.tools.StageProfile q_topk_native"
   * }}}
   */
 object StageProfile {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.network.timeout", "3600s")
-      .config("spark.local.dir", s"${graft.Scratch.root}/spark-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TopKPerKey.register(spark)
+    val sfDir = graft.Session.sfDir
+    val explain = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")
+    val spark = graft.Session.local()
     // A/B hook: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" applies runtime SQL
     // confs so a candidate setting can be profiled without a rebuild.
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach {
@@ -59,31 +52,24 @@ object StageProfile {
       }
     })
 
-    // Same pre-warm surface as Bench so the first profiled query does not
-    // absorb one-time materialization cost.
-    spark.range(100000).selectExpr("id % 7 AS k", "id AS v")
-      .groupBy("k").count().count()
-    graft.operators.Advanced.bucketize(spark, sfDir, "lineitem", "l_orderkey")
-    graft.operators.Advanced.bucketize(spark, sfDir, "orders", "o_orderkey")
-    graft.operators.Advanced.bucketize(spark, sfDir, "events", "user_id")
-    graft.operators.Formats.prewarm(spark, sfDir)
-    graft.operators.TextPipeline.prewarmTruth(spark, sfDir)
+    // Same warm-up as Bench, so the first profiled query does not absorb
+    // one-time materialization cost.
+    graft.Session.warm(spark, sfDir)
 
     val names = if (args.nonEmpty) args.toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
+    // Stage-completed events trail the job end on the async listener bus:
+    // the queue is cleared and read only once every event is delivered.
+    val sc = spark.sparkContext
     names.foreach { name =>
+      ListenerBusDrain.drain(sc)
       stages.clear()
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
+      if (explain) df.explain()
       val t0 = System.nanoTime()
       val n = df.count()
       val dt = (System.nanoTime() - t0) / 1e9
-      // drain the async listener bus before reading/clearing the queue
-      // (r18 ADVICE: late stage-completed events were dropped or
-      // attributed to the next query's breakdown). listenerBus is
-      // private[spark]; a short settle after the action is enough for
-      // a dev tool — stage-completed events trail the job end by
-      // milliseconds, not seconds.
-      Thread.sleep(500)
+      ListenerBusDrain.drain(sc)
       println(f"==== $name  total=$dt%.2fs rows=$n")
       import scala.jdk.CollectionConverters._
       stages.asScala.toSeq.sortBy(-_.taskMs).foreach { r =>

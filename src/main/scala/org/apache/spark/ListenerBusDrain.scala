@@ -1,6 +1,6 @@
 package org.apache.spark
 
-/** Test helper: waits until the listener bus has delivered every event
+/** Waits until the listener bus has delivered every event
   * posted so far, so a listener's counts are complete when read. The bus
   * is package-private to Spark, hence this file's package.
   */

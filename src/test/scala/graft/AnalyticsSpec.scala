@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Brute-force re-derivations and plan pins for the Analytics module at
   * sf0.001: dense ids against the global-sort spelling, attribution
@@ -11,18 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the domain-window discipline (every unpartitioned window sits above a
   * HashAggregate) for the three order-statistic queries.
   */
-class AnalyticsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class AnalyticsSpec extends SparkSuite {
 
   test("dense ids: bucketed assignment equals the global-sort spelling") {
     val got = q("q_dense_ids").collect()

@@ -1,23 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Semantic invariants for the round-8 Association block (reciprocity,
   * Poisson dispersion, Kendall tau, seasonality strength, capture-
   * recapture, odds ratio) at sf0.001.
   */
-class AssociationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class AssociationSpec extends SparkSuite {
 
   test("reciprocity equals a driver-side edge-set check") {
     import org.apache.spark.sql.functions._

@@ -1,24 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic invariants for the round-8 Auditing block (grouping_id
   * cube, t-closeness, per-class F1, degree distribution, clustering
   * depth) and the stateful streaming EWMA, at sf0.001.
   */
-class AuditingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class AuditingSpec extends SparkSuite {
 
   test("grouping_id: strata reconcile to the same grand total") {
     val rows = q("q_grouping_id").collect()

@@ -1,25 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Property tests for the native bitmap-index aggregate
   * (functions/Bitmap.scala) and brute-force re-derivations of the
   * decay-score and Gini queries.
   */
-class BitmapSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class BitmapSpec extends SparkSuite {
 
   test("bitmap cardinality is exact and partition-invariant") {
     import graft.functions.BitmapAgg.{bitmap, cardinality}

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Hand-computed golden fixtures for the q_bpe_train merge loop (r17
   * verdict task #8's "bounded driver state asserted in a spec"): the
   * trainer's driver state is the merge table plus ONE argmax row per
@@ -14,22 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * symbol the loop stops, emitting fewer than Rounds rows rather than
   * degenerate merges.
   */
-class BpeTrainSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString
-
-  private def cleanup(dir: String): Unit = {
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    ()
-  }
+class BpeTrainSpec extends SparkSuite {
 
   private def writeDocs(dir: String,
       rows: Seq[(Long, String, String)]): Unit = {

@@ -1,22 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Semantic invariants for the round-8 Calibration block (isotonic
   * fit, proportion z-test, correlation pruning) at sf0.001.
   */
-class CalibrationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class CalibrationSpec extends SparkSuite {
 
   test("isotonic fit is nondecreasing and equals a driver-side PAVA") {
     val rows = q("q_isotonic_fit").collect()

@@ -3,23 +3,12 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Spark's generated-class cache is sized in build.sbt's javaOptions so
   * that repeated queries reuse their compiled classes instead of evicting
   * each other's and recompiling them with Janino on every run.
   */
-class CodegenCacheSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
+class CodegenCacheSpec extends SparkSuite {
 
   /** perfbench's `query_mix` set: one batch query per cost stratum of
     * perfbench/query_costs.json (the same for every seed). Together they

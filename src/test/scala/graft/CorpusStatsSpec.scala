@@ -1,23 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Semantic invariants for the round-8 CorpusStats block (Cramér's V,
   * U-shaped attribution, concordance, coverage curve, Simpson
   * diversity, RBO) at sf0.001.
   */
-class CorpusStatsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class CorpusStatsSpec extends SparkSuite {
 
   test("Cramér's V is bounded and consistent with chi2") {
     val r = q("q_cramers_v").collect().head

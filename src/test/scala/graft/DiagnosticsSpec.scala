@@ -1,24 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Semantic invariants for the round-8 Diagnostics block (Mann-Kendall,
   * runs test, Friedman, partial correlation, transition entropy,
   * sequence gaps, burstiness) at sf0.001 — driver-side re-derivations
   * and algebraic identities alongside the SQL-parity oracle gate.
   */
-class DiagnosticsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class DiagnosticsSpec extends SparkSuite {
 
   private def dailyCounts(): Map[String, Seq[(Long, Long)]] = {
     import org.apache.spark.sql.functions._

@@ -1,22 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Semantic invariants for the round-8 EffectSizes block (MCC, kappa,
   * Cohen's d, ALS step, IPS, Lorenz deciles) at sf0.001.
   */
-class EffectSizesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class EffectSizesSpec extends SparkSuite {
 
   test("MCC is bounded and consistent with the confusion cells") {
     val r = q("q_mcc").collect().head

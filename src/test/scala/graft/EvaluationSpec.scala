@@ -1,25 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Independent re-derivations of the Evaluation-module results: each
   * query's distributed/quantized formulation is checked against the
   * obviously-correct brute-force spelling on collected sf0.001 rows.
   */
-class EvaluationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class EvaluationSpec extends SparkSuite {
 
   /** Mirror of Spark/DuckDB round(x, 0): HALF_UP away from zero —
     * math.round rounds half toward +infinity and diverges on negative

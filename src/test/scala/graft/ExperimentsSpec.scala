@@ -1,22 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Semantic invariants for the round-8 Experiments block (CUPED,
   * regularity, peaks, equi-depth histogram) at sf0.001.
   */
-class ExperimentsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class ExperimentsSpec extends SparkSuite {
 
   test("CUPED never increases variance and preserves the global mean") {
     val rows = q("q_cuped_adjust").collect()

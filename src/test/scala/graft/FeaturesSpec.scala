@@ -1,22 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantics checks for the feature-engineering encoders at sf0.001. */
-class FeaturesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class FeaturesSpec extends SparkSuite {
 
   test("one-hot rows carry exactly one indicator, matching the type") {
     val rows = q("q_onehot_encode").collect()

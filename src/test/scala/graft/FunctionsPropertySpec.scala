@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, rng}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Property tests for the native codegen'd expressions: random token /
   * vector inputs -> algebraic invariants of the signatures, checked
@@ -12,13 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * chooses). Fixed scalacheck seed, bounded samples — each case round
   * trips through a DataFrame.
   */
-class FunctionsPropertySpec extends AnyFunSuite {
+class FunctionsPropertySpec extends SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  override protected def shufflePartitions: Int = 2
 
   private val seed = rng.Seed(20260812L)
 

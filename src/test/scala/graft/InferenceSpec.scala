@@ -1,24 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Semantic invariants for the round-8 Inference block (rank-based
   * tests, Theil-Sen, Brier decomposition, proximity, MRR, imputation,
   * assortativity, burn rate) at sf0.001 — driver-side re-derivations
   * and algebraic identities alongside the SQL-parity oracle gate.
   */
-class InferenceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class InferenceSpec extends SparkSuite {
 
   test("Mann-Whitney U equals a driver-side midrank computation") {
     import org.apache.spark.sql.functions._

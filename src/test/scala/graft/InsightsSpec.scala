@@ -1,8 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Brute-force re-derivations of the Insights-module results at
   * sf0.001: the bucket-reduced skyline against the quadratic domination
@@ -10,18 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * windowed trigram miner against per-user sequence slicing, and the
   * basket pair join against nested-loop pair counting.
   */
-class InsightsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class InsightsSpec extends SparkSuite {
 
   test("skyline: output is exactly the undominated bucket-best set") {
     val out = q("q_skyline").collect()

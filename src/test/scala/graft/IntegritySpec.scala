@@ -1,25 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic invariants for the round-8 Integrity + Relevance blocks
   * (checksums, range bounds, delta encoding, bloom audit, temporal
   * split; HITS, phrase match, keyness, feature hash, rare collapse,
   * PR curve, lift deciles), at sf0.001.
   */
-class IntegritySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class IntegritySpec extends SparkSuite {
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

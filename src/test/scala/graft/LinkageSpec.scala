@@ -1,23 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Semantic invariants for the round-7 Linkage block (sorted-neighborhood
   * blocking, containment, RAKE, bootstrap CI) — independent driver-side
   * re-derivations at sf0.001, complementing the SQL-parity oracle gate.
   */
-class LinkageSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class LinkageSpec extends SparkSuite {
 
   test("sorted-neighborhood pairs match a driver-side window scan") {
     import org.apache.spark.sql.functions.col

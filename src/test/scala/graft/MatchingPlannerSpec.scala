@@ -1,24 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic invariants for the round-9 Matching + Planner blocks
   * (perceptual-hash dedup, Fellegi-Sunter weights, join/selectivity
   * estimate audits, IVF balance, lag features), at sf0.001.
   */
-class MatchingPlannerSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class MatchingPlannerSpec extends SparkSuite {
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -1,22 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Semantic invariants for the round-7 Mining block (winnowing, bounded
   * k-core, Holt smoothing) — exact driver-side re-derivations at sf0.001.
   */
-class MiningSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class MiningSpec extends SparkSuite {
 
   test("winnowing fingerprints equal a driver-side window-minimum scan") {
     import org.apache.spark.sql.functions.col

@@ -1,23 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Semantic invariants for the round-8 Modeling block (Holt-Winters,
   * PI coverage, label propagation, perceptron step, randomized
   * response) plus the native streaming session window, at sf0.001.
   */
-class ModelingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class ModelingSpec extends SparkSuite {
 
   test("Holt-Winters equals a driver-side sequential fold") {
     import org.apache.spark.sql.functions._

@@ -1,24 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Semantic invariants for the round-7 Operational + Learning blocks,
   * each checked against an independent driver-side re-derivation on the
   * sf0.001 corpus (the oracle gate checks SQL parity; these check the
   * MATH against a second algorithm).
   */
-class OperationalSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class OperationalSpec extends SparkSuite {
 
   test("interval union equals a driver-side sweep per user") {
     import org.apache.spark.sql.functions._

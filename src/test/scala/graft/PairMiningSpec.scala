@@ -1,25 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Brute-force re-derivations for the round-6 pair-mining operators at
   * sf0.001 (association rules, common-neighbor link prediction, the
   * blocked prefix set-similarity join) plus plan pins for the TPC-H
   * macro additions (Q7/Q14/Q17).
   */
-class PairMiningSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class PairMiningSpec extends SparkSuite {
 
   test("ssjoin: blocked prefix-filter candidates lose no qualifying " +
       "pair (exact within-block Jaccard, brute-forced)") {

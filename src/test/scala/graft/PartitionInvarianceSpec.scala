@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Partition-count invariance for the round-9 descaled rewrites: every
   * query whose single-partition window was collapsed onto a boundary
   * relation (tie-group prefix sums, bucketed ranks, histogram
@@ -10,9 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * plans 1 shuffle partition or 13 — the property that makes the
   * rewrite safe to claim as "same output at any partition count".
   */
-class PartitionInvarianceSpec extends AnyFunSuite {
-
-  private val sf = "/root/testdata/sf0.001"
+class PartitionInvarianceSpec extends SparkSuite {
 
   private val targets = Seq("q_vocab_gini", "q_coverage_curve",
     "q_knee_point", "q_topk_loo", "q_curriculum_bins", "q_conv_lag",
@@ -97,21 +92,18 @@ class PartitionInvarianceSpec extends AnyFunSuite {
 
   test("descaled rewrites are bit-identical at 1 vs 13 shuffle " +
     "partitions") {
-    // SparkSession.builder getOrCreate reuses one context; the shuffle
-    // partition count is session-conf, so set it per pass
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the shuffle partition count is session conf: set it per pass, and
+    // give the shared session back as this spec found it
     def pass(parts: Int): Map[String, Seq[String]] = {
-      s.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
       targets.map { q =>
-        q -> SparkEntry.queries(q)(s, sf).collect().toSeq.map(_.toString)
+        q -> SparkEntry.queries(q)(spark, sf).collect().toSeq.map(_.toString)
       }.toMap
     }
-    val at1 = pass(1)
-    val at13 = pass(13)
+    val (at1, at13) =
+      try (pass(1), pass(13))
+      finally spark.conf.set("spark.sql.shuffle.partitions",
+        shufflePartitions.toString)
     targets.foreach { q =>
       assert(at1(q) == at13(q), s"$q diverges with partition count")
       assert(at1(q).nonEmpty, s"$q empty")

@@ -1,24 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Physical-plan shape assertions (SURVEY.md §4): the properties that
   * make these queries survive a 100x scale-up are pinned here so a
   * refactor that silently loses a pushdown, a broadcast, or partial
   * aggregation — or reintroduces a cartesian product — fails CI, not the
   * cluster.
   */
-class PlanQualitySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
+class PlanQualitySpec extends SparkSuite {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString

@@ -1,23 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Inventory-level checks at sf0.001: every registered query runs and
   * returns rows; every oracle key has a query; cross-checks between
   * independent implementations of the same semantics (MinHash candidates
   * vs exact n-gram Jaccard pairs; streaming vs batch tumbling windows).
   */
-class QueryInventorySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
+class QueryInventorySpec extends SparkSuite {
 
   test("oracle keys are a subset of query keys") {
     val q = SparkEntry.queries.keySet

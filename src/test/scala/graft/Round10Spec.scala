@@ -1,24 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Property pins for the round-10 operators: each new query's defining
   * invariant is cross-checked against an independent derivation (the
   * house discipline — the DuckDB oracle proves engine parity, these
   * prove the SEMANTICS).
   */
-class Round10Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class Round10Spec extends SparkSuite {
 
   test("session gap sweep: session counts fall monotonically as the " +
     "gap threshold grows, and never below the user count") {

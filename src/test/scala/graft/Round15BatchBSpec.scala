@@ -1,30 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Fixture specs for the second round-15 query block (price index,
   * chain ladder, Fleiss/Cochran, resource-allocation link prediction,
   * Hurst R/S, SAX motifs, Nelson-Aalen). Same discipline as
   * Round15NewQueriesSpec: every query lands WITH hand-computable edge
   * pins; the inventory-wide PlanQualitySpec sweep pins the plans.
   */
-class Round15BatchBSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString
-
-  private def rm(dir: String): Unit = {
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    ()
-  }
+class Round15BatchBSpec extends SparkSuite {
 
   private def ts(s: String): java.sql.Timestamp =
     java.sql.Timestamp.valueOf(s + " 00:00:00")
@@ -54,7 +36,7 @@ class Round15BatchBSpec extends AnyFunSuite {
     assert(got.getAs[Double]("p_bar") == pBar)
     assert(got.getAs[Double]("p_e") == pE)
     assert(got.getAs[Double]("kappa") == (pBar - pE) / (1.0 - pE))
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_cochran_q: hand-computed Q on three planted blocks; " +
@@ -77,7 +59,7 @@ class Round15BatchBSpec extends AnyFunSuite {
     assert(got.getAs[Long]("k") == 3L)
     assert(got.getAs[Long]("t") == 5L)
     assert(got.getAs[Double]("q_stat") == 2.0)
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_price_index: two-part two-month hand index (Laspeyres " +
@@ -106,7 +88,7 @@ class Round15BatchBSpec extends AnyFunSuite {
     assert(feb.getAs[Double]("paasche") == 5200.0 / 4000.0)
     assert(feb.getAs[Double]("fisher") ==
       math.sqrt((7100.0 / 5000.0) * (5200.0 / 4000.0)))
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_chain_ladder: hand-built 2-cohort triangle; young cohorts " +
@@ -134,7 +116,7 @@ class Round15BatchBSpec extends AnyFunSuite {
     assert(got(1).getAs[Long]("dev") == 1L)
     assert(got(1).getAs[Long]("n_cohorts") == 1L)
     assert(got(1).getAs[Double]("factor") == 17500.0 / 15000.0)
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_graph_resource_alloc: df-weighted shared-neighbor teeth; " +
@@ -155,7 +137,7 @@ class Round15BatchBSpec extends AnyFunSuite {
     assert(got(0) == ((1L, 2L, 2L, 833333333L.toDouble / 1e9)))
     assert(got(1) == ((1L, 3L, 1L, 333333333L.toDouble / 1e9)))
     assert(got(2) == ((2L, 3L, 1L, 333333333L.toDouble / 1e9)))
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_hurst_rs: alternating two-level series has exact R/S = 1 " +
@@ -174,7 +156,7 @@ class Round15BatchBSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("w"), r.getAs[Long]("n_windows"),
         r.getAs[Double]("mean_rs"), r.getAs[Double]("rs_ratio_vs8")))
     assert(got.toSeq == Seq((8L, 2L, 1.0, 1.0), (16L, 1L, 1.0, 1.0)))
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_sax_motifs: strictly increasing series symbolizes a,a,c,d,d " +
@@ -192,7 +174,7 @@ class Round15BatchBSpec extends AnyFunSuite {
         r.getAs[Long]("c"), r.getAs[Long]("rnk")))
     assert(got.toSeq == Seq(("t", "aac", 1L, 1L), ("t", "acd", 1L, 2L),
       ("t", "cdd", 1L, 3L)))
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_nelson_aalen: hand-computed weekly hazard; censored users " +
@@ -217,6 +199,6 @@ class Round15BatchBSpec extends AnyFunSuite {
       ("x", 0L, 4L, 1L, 0.25),
       ("x", 1L, 2L, 1L, 0.75),
       ("x", 2L, 1L, 1L, 1.75)))
-    rm(dir)
+    cleanup(dir)
   }
 }

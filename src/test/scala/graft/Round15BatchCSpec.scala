@@ -1,28 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Fixture specs for the third round-15 query block (simhash radius
   * eval, preferential attachment, meta-analysis pooling, Bowker
   * symmetry, Little's law).
   */
-class Round15BatchCSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString
-
-  private def rm(dir: String): Unit = {
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    ()
-  }
+class Round15BatchCSpec extends SparkSuite {
 
   private def ts(s: String): java.sql.Timestamp =
     java.sql.Timestamp.valueOf(s + " 00:00:00")
@@ -45,7 +27,7 @@ class Round15BatchCSpec extends AnyFunSuite {
     assert(got.forall { case (_, np, nh, ne, p, rc) =>
       np == 1L && nh == 1L && ne == 1L && p == 1.0 && rc == 1.0
     }, got.toSeq.toString)
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_graph_pref_attach: head pairs ranked by degree product with " +
@@ -68,7 +50,7 @@ class Round15BatchCSpec extends AnyFunSuite {
         r.getAs[Long]("score"), r.getAs[Long]("linked")))
     assert(got.toSeq == Seq((1L, 2L, 3L, 2L, 6L, 1L),
       (1L, 3L, 3L, 1L, 3L, 0L), (2L, 3L, 2L, 1L, 2L, 0L)))
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_meta_effect: hand-computed pooled effect, Cochran Q and I2 " +
@@ -88,7 +70,7 @@ class Round15BatchCSpec extends AnyFunSuite {
     assert(got.getAs[Double]("pooled_d") == 100.0)
     assert(got.getAs[Double]("q_stat") == 7500.0)
     assert(got.getAs[Double]("i2") == 7499.0 / 7500.0)
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_bowker: statistic matches an independent md5 recompute with " +
@@ -121,7 +103,7 @@ class Round15BatchCSpec extends AnyFunSuite {
     val got = SparkEntry.queries("q_bowker")(spark, dir).head()
     assert(got.getAs[Long]("df") == expDf)
     assert(got.getAs[Double]("bowker_chi2") == expChi)
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_rank_rbp: exact rational p=0.8 weights at ranks 1 and 3 " +
@@ -140,7 +122,7 @@ class Round15BatchCSpec extends AnyFunSuite {
     assert(got.getAs[Long]("n_rel") == 2L)
     assert(got.getAs[Double]("mean_rbp")
       == 0.2 * 1640000000.0 / (1e9 * 1.0))
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_linkage_em_step: hand-counted pattern census and the " +
@@ -174,7 +156,7 @@ class Round15BatchCSpec extends AnyFunSuite {
     assert(got.getAs[Double]("m2") == nm2 / den)
     assert(got.getAs[Double]("u1") == (3.0 - nm1) / (6.0 - den))
     assert(got.getAs[Double]("u2") == (2.0 - nm2) / (6.0 - den))
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_join_order_greedy: hand-built stats where the textbook " +
@@ -204,7 +186,7 @@ class Round15BatchCSpec extends AnyFunSuite {
       ("lo_c_p", 8.0, 4L, 3L, 1L, false),
       ("lp_o_c", lpEst, 5L, 1L, 3L, false),
       ("oc_l_p", 6.0, 4L, 2L, 2L, true)))
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_seasonal_mk: two strictly-rising weeks give S=7 over 7 " +
@@ -220,7 +202,7 @@ class Round15BatchCSpec extends AnyFunSuite {
     assert(got.getAs[Long]("n_seasons") == 7L)
     assert(got.getAs[Long]("s") == 7L)
     assert(got.getAs[Double]("z") == 6.0 / math.sqrt(126.0 / 18.0))
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_ngram_tscore: hand-computed Church/Hanks t for the one " +
@@ -237,7 +219,7 @@ class Round15BatchCSpec extends AnyFunSuite {
     assert(got(0).getAs[Long]("c2") == 5L)
     assert(got(0).getAs[Double]("t_score")
       == (5.0 - 5.0 * 5.0 / 10.0) / math.sqrt(5.0))
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_eoq: per-brand demand sums and the Wilson sqrt(2DS/H) " +
@@ -258,7 +240,7 @@ class Round15BatchCSpec extends AnyFunSuite {
     val ey = math.sqrt(2.0 * 40.0 * 50.0 / 2.0)
     assert(got.toSeq == Seq(("X", 2L, 60L, ex, 60.0 / ex),
       ("Y", 1L, 40L, ey, 40.0 / ey)))
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_littles_law: hand-computed monthly arrivals/WIP/cycle and " +
@@ -294,6 +276,6 @@ class Round15BatchCSpec extends AnyFunSuite {
     assert(feb.getAs[Double]("w_days") == 11.0)
     assert(feb.getAs[Double]("lambda_day") == 1.0 / 29)
     assert(feb.getAs[Double]("l_pred") == (1.0 / 29) * 11.0)
-    rm(dir)
+    cleanup(dir)
   }
 }

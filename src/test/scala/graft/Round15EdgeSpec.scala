@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15 ask #2/#3: unit/edge specs for the six queries that landed
   * after the round-14 plan-pin commit with only their DuckDB oracles
@@ -14,19 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * the same entry point Verify and the oracle use — so these pins hold
   * for exactly the code that ships.
   */
-class Round15EdgeSpec extends AnyFunSuite {
+class Round15EdgeSpec extends SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString
-
-  private def cleanup(dir: String, bucketed: (String, String)*): Unit = {
+  private def cleanupBucketed(dir: String, bucketed: (String, String)*)
+      : Unit = {
     // Drop fixture-dir bucketed tables AND their scratch dirs so this
     // suite never pushes a long-lived dataset's bucketed copy out of
     // Scratch.pruneLocked's keep-3 MRU window (the catalog would still
@@ -37,7 +26,7 @@ class Round15EdgeSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteQuietly(
         new java.io.File(s"${Scratch.root}/graft_bucketed/$t"))
     }
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    cleanup(dir)
   }
 
   private def md5hex(s: String): String =
@@ -117,7 +106,7 @@ class Round15EdgeSpec extends AnyFunSuite {
           x.getAs[Double]("avg_days")))).toMap
     assert(r("2-HIGH") == ((10L, 4L, 8L, 9L, 4.5)), r.toString)
     assert(r("1-URGENT") == ((3L, 7L, 7L, 7L, 7.0)), r.toString)
-    cleanup(dir, "lineitem" -> "l_orderkey", "orders" -> "o_orderkey")
+    cleanupBucketed(dir, "lineitem" -> "l_orderkey", "orders" -> "o_orderkey")
   }
 
   test("q_raking_ipf: a sample-missed cell is excluded from the fit " +
@@ -203,7 +192,7 @@ class Round15EdgeSpec extends AnyFunSuite {
     assert(out.map(_.getAs[Long]("n_bridges")).sum == 5L)
     assert(out.forall(_.getAs[Double]("bridge_share") == 1.0),
       out.mkString(","))
-    cleanup(dir, "lineitem" -> "l_orderkey")
+    cleanupBucketed(dir, "lineitem" -> "l_orderkey")
   }
 
   test("q_revenue_waterfall: narrow-decimal recast keeps every " +
@@ -250,7 +239,7 @@ class Round15EdgeSpec extends AnyFunSuite {
           r.getAs[Double]("tax_amt"), r.getAs[Double]("billed"))))
       .toMap
     assert(got == want, s"got $got\nwant $want")
-    cleanup(dir, "lineitem" -> "l_orderkey")
+    cleanupBucketed(dir, "lineitem" -> "l_orderkey")
   }
 
   test("q_hard_negatives: a probe whose candidates ALL share its " +

@@ -1,32 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Unit/fixture specs for the round-15 query additions — every new
   * query lands WITH its edge pins (the round-14 lesson: the six
   * post-pin queries shipped oracle-only and became the verdict's top
   * ask). The inventory-wide PlanQualitySpec sweep pins their plans;
   * these pin their semantics on hand-computable fixtures.
   */
-class Round15NewQueriesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-
-  private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString
-
-  private def rm(dir: String): Unit = {
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    ()
-  }
+class Round15NewQueriesSpec extends SparkSuite {
 
   test("q_hapax_ratio: corpus-hapax tokens partition across sources; " +
     "shared and repeated tokens never count") {
@@ -44,7 +24,7 @@ class Round15NewQueriesSpec extends AnyFunSuite {
       .toMap
     assert(got("A") == ((2L, 3L, 0L, 0.0)), got.toString)
     assert(got("B") == ((2L, 2L, 1L, 0.5)), got.toString)
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_heaps_law: first-appearance bands partition the vocabulary " +
@@ -68,7 +48,7 @@ class Round15NewQueriesSpec extends AnyFunSuite {
     val cums = rows.map(_.getAs[Long]("cum_tokens"))
     assert(cums.zip(cums.tail).forall { case (a, b) => b >= a })
     assert(cums.last == docs.map(_._2.split(" ").length.toLong).sum)
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_mcnemar: cells match an independent md5 recompute and the " +
@@ -96,7 +76,7 @@ class Round15NewQueriesSpec extends AnyFunSuite {
     assert(a + b > 0, "fixture has no disagreements — no teeth")
     val want = (a - b).toDouble * (a - b).toDouble / (a + b).toDouble
     assert(r.getAs[Double]("mcnemar_chi2") == want)
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_levene_bf: unequal spreads push F up; identical deviation " +
@@ -130,7 +110,7 @@ class Round15NewQueriesSpec extends AnyFunSuite {
       "b" -> 5.0, "b" -> 6.0, "b" -> 7.0))
     val r2 = SparkEntry.queries("q_levene_bf")(spark, dir).collect().head
     assert(math.abs(r2.getAs[Double]("f_bf")) < 1e-3, r2.toString)
-    rm(dir)
+    cleanup(dir)
   }
 
   test("q_image_aspect and q_media_format_mix surface all four parsed " +

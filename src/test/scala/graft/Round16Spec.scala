@@ -1,30 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Closed-form unit/edge fixtures for the eleven round-16 operators,
   * each driven through the REGISTERED query (the entry point Verify and
   * the oracle use). Every expected value below is derived by hand from
   * the statistic's definition, so a compensating bug shared by the
   * Spark query and its DuckDB oracle cannot pass here.
   */
-class Round16Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString
-
-  private def cleanup(dir: String): Unit = {
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    ()
-  }
+class Round16Spec extends SparkSuite {
 
   private def ts(date: String, hms: String = "00:00:00"): java.sql.Timestamp =
     java.sql.Timestamp.valueOf(s"$date $hms")

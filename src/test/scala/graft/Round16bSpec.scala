@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Closed-form unit fixtures for the round-16 continuation operators
   * (log-rank, two-sample Anderson-Darling, Jonckheere-Terpstra,
   * Bartels rank von Neumann), each driven through the REGISTERED query.
@@ -10,22 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * definition, so a compensating bug shared by the Spark query and its
   * DuckDB oracle cannot pass here.
   */
-class Round16bSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString
-
-  private def cleanup(dir: String): Unit = {
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    ()
-  }
+class Round16bSpec extends SparkSuite {
 
   private def ts(date: String, hms: String = "00:00:00"): java.sql.Timestamp =
     java.sql.Timestamp.valueOf(s"$date $hms")

@@ -1,30 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-17 pins: the q_dedup_embedding all-pairs guard is a PAIR
   * budget (verdict task #3) — the cap derivation is asserted in
   * closed form and the tripwire is exercised on a real over-budget
   * table, so a future loosening of either fails here.
   */
-class Round17Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString
-
-  private def cleanup(dir: String): Unit = {
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    ()
-  }
+class Round17Spec extends SparkSuite {
 
   test("all-pairs vector cap derives from the 5e9 pair budget: " +
     "n(n-1)/2 <= budget and (n+1)n/2 > budget") {
@@ -61,7 +44,6 @@ class Round17Spec extends AnyFunSuite {
 
   test("q_minhash_delta: stored base-only census + delta work equals " +
     "the from-scratch q_dedup_minhash rebuild on the merged corpus") {
-    val sf = "/root/testdata/sf0.001"
     def key(r: org.apache.spark.sql.Row) =
       (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"),
         r.getAs[Double]("jac"))
@@ -212,7 +194,6 @@ class Round17Spec extends AnyFunSuite {
 
   test("q_streaming_bandindex: the drained live-index collisions " +
     "equal the batch candidate relation exactly") {
-    val sf = "/root/testdata/sf0.001"
     def key(r: org.apache.spark.sql.Row) =
       (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"))
     val streamed = SparkEntry.queries("q_streaming_bandindex")(spark, sf)

@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The zipf skew builder (ScaleProbe.buildSkewed) is measurement
   * infrastructure the scale story leans on — if its ladder drifts, the
@@ -12,16 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (unshifted l_orderkey), and doc_id uniqueness + near-dup family
   * text on documents.
   */
-class SkewBuildSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
+class SkewBuildSpec extends SparkSuite {
 
   test("zipf build: ~10x volume, hot keys own a real share, keys stay " +
     "sound") {

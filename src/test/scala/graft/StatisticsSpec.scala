@@ -1,23 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Semantic invariants for the round-7 Statistics block (Kaplan-Meier,
   * seasonal decomposition, silhouette) at sf0.001 — driver-side exact
   * re-derivations alongside the SQL-parity oracle gate.
   */
-class StatisticsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class StatisticsSpec extends SparkSuite {
 
   test("Kaplan-Meier survival equals a driver-side fold") {
     import org.apache.spark.sql.functions._

@@ -1,23 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Semantic invariants for the round-8 Stratified block (Neyman
   * allocation, Mantel-Haenszel, top-k LOO, elasticity, ABC) at
   * sf0.001.
   */
-class StratifiedSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class StratifiedSpec extends SparkSuite {
 
   test("Neyman allocation shares sum to one; counts near the budget") {
     val rows = q("q_neyman_alloc").collect()

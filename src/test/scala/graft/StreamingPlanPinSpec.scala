@@ -3,9 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-16 (r15 ask #5): plan-pin the streaming twins. The
   * inventory-wide no-cartesian sweep (PlanQualitySpec) excludes
@@ -22,16 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * any of them — a cartesian in a twin's batch plan now fails CI
   * exactly like one in a registered batch query.
   */
-class StreamingPlanPinSpec extends AnyFunSuite {
+class StreamingPlanPinSpec extends SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
+  override protected def shufflePartitions: Int = 2
 
   /** A captured SQL execution is a streaming MICRO-BATCH execution
     * (not an incidental batch job from replay staging or the drained-

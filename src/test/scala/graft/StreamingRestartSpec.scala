@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-import org.scalatest.funsuite.AnyFunSuite
 
 import streaming.StatefulEwma
 import streaming.StatefulEwma.{EwmaEvent, EwmaRow, EwmaState}
@@ -26,16 +24,9 @@ import streaming.StatefulEwma.{EwmaEvent, EwmaRow, EwmaState}
   * sink's _spark_metadata commit log, which the batch reader then
   * consults for the committed-files view.
   */
-class StreamingRestartSpec extends AnyFunSuite {
+class StreamingRestartSpec extends SparkSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
+  override protected def shufflePartitions: Int = 2
 
   test("stateful EWMA restarted from its checkpoint matches the " +
     "uninterrupted batch result exactly") {

@@ -1,22 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Semantic invariants for the round-7 Telemetry block (cross-corr,
   * bursts, audience overlap) at sf0.001.
   */
-class TelemetrySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class TelemetrySpec extends SparkSuite {
 
   test("cross-correlation covers all 7 lags with valid coefficients") {
     val rows = q("q_cross_corr").collect()

@@ -1,25 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic invariants for the round-12 TrainingMix block (token
   * budget, epoch plan, truncation waste, soft dedup, CCNet buckets,
   * annealed mix), at sf0.001 — the cross-column identities the DuckDB
   * oracle can't see because both engines would break them together.
   */
-class TrainingMixSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class TrainingMixSpec extends SparkSuite {
 
   test("token budget: statuses are a kept/boundary/dropped prefix " +
     "split in score order with a consistent cumulative curve") {

@@ -1,24 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic invariants for the round-8 Training block (negative
   * sampling, hard negatives, ANOVA, CDC delete-merge, norm audit),
   * at sf0.001.
   */
-class TrainingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class TrainingSpec extends SparkSuite {
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -1,23 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic invariants for the round-8 Trends block (novelty, time
   * heatmap, WoW growth, HHI concentration), at sf0.001.
   */
-class TrendsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class TrendsSpec extends SparkSuite {
 
   test("doc novelty matches a driver-side shingle-df recomputation") {
     val rows = q("q_doc_novelty").collect()

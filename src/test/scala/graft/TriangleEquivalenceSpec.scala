@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The size-gated q_graph_triangle strategy (round 13) flips between
   * the adjacency-broadcast edge-iterator and the co-partitioned wedge
   * join at TriangleBroadcastEdgeCap. The gate is only sound if the two
@@ -12,16 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the broadcast path, so the wedge path would otherwise go
   * unexercised by the oracle sweep).
   */
-class TriangleEquivalenceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
+class TriangleEquivalenceSpec extends SparkSuite {
 
   test("wedge-join and broadcast-adjacency triangle spellings return " +
     "identical rows") {

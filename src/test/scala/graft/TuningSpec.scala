@@ -1,23 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic invariants for the round-8 Tuning block (threshold sweep,
   * minhash candidate eval, chi-square residuals), at sf0.001.
   */
-class TuningSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class TuningSpec extends SparkSuite {
 
   test("dedup sweep: implicated pairs and docs shrink monotonically " +
     "as the threshold tightens, anchored at the full pair relation") {

@@ -1,23 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Semantic invariants for the round-8 Validation block (expectation
   * audit, quarantine, histograms, freshness, Zipf fit, curation funnel)
   * plus the ANN recall eval, at sf0.001.
   */
-class ValidationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private val sf = "/root/testdata/sf0.001"
-  private def q(name: String) = SparkEntry.queries(name)(spark, sf)
+class ValidationSpec extends SparkSuite {
 
   test("expectation audit: rates are consistent and statuses agree") {
     val rows = q("q_expect_audit").collect()

@@ -1,21 +1,16 @@
 package graft.xml
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Unit tests per shaping rule (SURVEY.md §1.4 / §5.2-2): each rule of
   * the reference's NestedParqConverter as a micro-XML snippet + expected
   * shaped output.
   */
-class ShapingRulesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ShapingRulesSpec extends SparkSuite {
 
   private val xmlOpts = {
     val m = new java.util.HashMap[String, String]()

@@ -1,8 +1,6 @@
 package graft.xml
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
+import graft.SparkSuite
 import graft.operators.XmlQueries
 import graft.sources.ArchiveXmlSource
 import graft.xml.XmlToParquetJob.Config
@@ -11,13 +9,7 @@ import graft.xml.XmlToParquetJob.Config
   * equivalent of the reference's README golden outputs (full document,
   * include-path, exclude-path; SURVEY.md §5.1).
   */
-class XmlConversionSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class XmlConversionSpec extends SparkSuite {
 
   private def xmlPath =
     XmlQueries.fixtureDir.resolve("bookOrder.xml").toString

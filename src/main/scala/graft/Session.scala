@@ -67,18 +67,11 @@ object Session {
     step("streaming") {
       import org.apache.spark.sql.functions.count
       val replay = streaming.StatefulSession.replayDir(spark, sfDir)
-      val ckpt = Scratch.dir("graft_ckpt/warm-" +
-        java.util.UUID.randomUUID().toString.take(8))
-      val q = spark.readStream
-        .schema("ts_us LONG, user_id LONG, value DOUBLE")
+      streaming.Replay.drain(spark.readStream
+        .schema(streaming.Replay.EventsSchema)
         .option("pathGlobFilter", "batch0.parquet")
         .parquet(replay)
-        .groupBy("user_id").agg(count("*"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName("graft_warmup_stream")
-        .option("checkpointLocation", ckpt).start()
-      try q.processAllAvailable() finally q.stop()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
+        .groupBy("user_id").agg(count("*")), "complete")
       ()
     }
   }

@@ -23,9 +23,16 @@ object StreamMicrobatchProfile {
     val spark = Session.local()
 
     val rows = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // sink names are per-run ids: label each run with the twin that
+    // started it (onQueryStarted runs synchronously inside start())
+    @volatile var current = ""
+    val twinOf =
+      new java.util.concurrent.ConcurrentHashMap[java.util.UUID, String]()
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+          e: StreamingQueryListener.QueryStartedEvent): Unit = {
+        twinOf.put(e.runId, current); ()
+      }
       override def onQueryTerminated(
           e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
       override def onQueryProgress(
@@ -41,7 +48,8 @@ object StreamMicrobatchProfile {
             s""""memUsedBytes":${so.memoryUsedBytes}}"""
         }.mkString("[", ",", "]")
         rows.add(
-          s"""{"query":"${p.name}","batch":${p.batchId},""" +
+          s"""{"twin":"${twinOf.get(p.runId)}","query":"${p.name}",""" +
+            s""""batch":${p.batchId},""" +
             s""""rowsIn":${p.numInputRows},""" +
             s""""triggerMs":${ms("triggerExecution")},""" +
             s""""addBatchMs":${ms("addBatch")},""" +
@@ -54,6 +62,7 @@ object StreamMicrobatchProfile {
     })
 
     for (q <- Seq("q_streaming_sessionwin", "q_streaming_ohlc")) {
+      current = q
       val t0 = System.nanoTime()
       SparkEntry.queries(q)(spark, sfDir).count()
       val dt = (System.nanoTime() - t0) / 1e9

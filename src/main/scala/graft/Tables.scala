@@ -136,7 +136,8 @@ object Tables {
 
   /** events.parquet with its raw on-disk schema (ts as nanos long or as
     * a native timestamp, depending on the dataset generation) — the
-    * schema a streaming file source must be given (see StreamingSmoke).
+    * schema a streaming file source must be given (see
+    * streaming.Replay.events).
     */
   def rawEventsSchema(spark: SparkSession, dir: String): StructType = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

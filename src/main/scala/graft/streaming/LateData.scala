@@ -27,38 +27,15 @@ object LateData extends QueryModule {
 
   private val SentinelUser = -1L
 
-  /** Out-of-order replay: same derivation as StatefulSession.replayDir
-    * but split by event_id parity instead of time.
+  /** Out-of-order replay (see Replay.replay): split by event_id parity
+    * instead of time.
     */
-  private[graft] def lateReplayDir(s: SparkSession, d: String): String = {
-    val src = new java.io.File(d, "events.parquet")
-    val desc =
-      s"${src.getAbsolutePath}|${src.length}|${src.lastModified}|late-v2"
-    val fp = java.security.MessageDigest.getInstance("MD5")
-      .digest(desc.getBytes("UTF-8")).take(6).map(b => f"$b%02x").mkString
-    val dir = new java.io.File(s"${graft.Scratch.root}/graft_replay/$fp")
-    if (!dir.exists()) {
-      val schema = graft.Tables.rawEventsSchema(s, d)
-      val raw = graft.Tables.normalizeEventTs(
-        s.read.schema(schema).option("pathGlobFilter", "events.parquet")
-          .parquet(d))
-        .select(unix_micros(col("ts")).as("ts_us"), col("user_id"),
-          col("value"), col("event_id"), col("event_type"))
+  private[graft] def lateReplayDir(s: SparkSession, d: String): String =
+    Replay.replay(s, d, "events.parquet", "late-v2", batches = 3) {
+      val raw = Replay.eventRows(s, d)
+      val even = raw.filter(col("event_id") % 2 === 0)
       val Row(mx: Long) = raw.agg(max("ts_us")).head()
-      val tmp = new java.io.File(s"${graft.Scratch.root}/graft_replay/.tmp-$fp-" +
-        java.util.UUID.randomUUID().toString.take(8))
-      tmp.mkdirs()
-      def writeOne(df: DataFrame, name: String, mtime: Long): Unit = {
-        val stage = new java.io.File(tmp, s".stage_$name")
-        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(tmp, name)
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        org.apache.commons.io.FileUtils.deleteDirectory(stage)
-        dest.setLastModified(mtime)
-      }
-      val t0 = src.lastModified()
-      import s.implicits._
+      val Row(mxEven: Long) = even.agg(max("ts_us")).head()
       // Three batches, because the watermark bites one batch late:
       // eviction for windows <= wm runs at the END of the first batch
       // processed under that wm, and the LATE-EVENT filter uses the
@@ -67,54 +44,22 @@ object LateData extends QueryModule {
       // watermark (even ids), the heartbeat batch lets eviction run
       // with no data riding along, and batch2's odd ids then hit the
       // late-event filter for real.
-      val Row(mxEven: Long) = raw.filter(col("event_id") % 2 === 0)
-        .agg(max("ts_us")).head()
-      val heartbeat = Seq((mxEven, -2L, 0.0d, -2L, "heartbeat"))
-        .toDF("ts_us", "user_id", "value", "event_id", "event_type")
       val sentinelTs = mx + 100L * 86400L * 1000000L
-      val sentinel = Seq((sentinelTs, SentinelUser, 0.0d, -1L, "sentinel"))
-        .toDF("ts_us", "user_id", "value", "event_id", "event_type")
-      writeOne(raw.filter(col("event_id") % 2 === 0),
-        "batch0.parquet", t0)
-      writeOne(heartbeat, "batch1.parquet", t0 + 60000L)
-      writeOne(raw.filter(col("event_id") % 2 === 1).unionAll(sentinel),
-        "batch2.parquet", t0 + 120000L)
-      if (!tmp.renameTo(dir))
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+      Seq(even, Replay.marker(s, mxEven, -2L, "heartbeat"),
+        raw.filter(col("event_id") % 2 === 1)
+          .unionAll(Replay.marker(s, sentinelTs, SentinelUser, "sentinel")))
     }
-    dir.toString
-  }
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] =
     Map(
       "q_streaming_late" -> ((s0, d) => {
-        // cloned session pins state partitions without touching
-        // the shared conf (see StreamingSmoke.sized)
-        val s = StreamingSmoke.sized(s0, "4")
-        val stream = s.readStream
-          .schema("ts_us LONG, user_id LONG, value DOUBLE, " +
-            "event_id LONG, event_type STRING")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(lateReplayDir(s, d))
+        val s = Replay.sized(s0, "4")
+        val agg = Replay.replayStream(s, lateReplayDir(s, d))
           .withColumn("ts", expr("timestamp_micros(ts_us)"))
           .withWatermark("ts", "0 seconds")
-        val agg = stream
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"))
-        val name = "graft_stream_late_" +
-          java.util.UUID.randomUUID().toString.take(8)
-        val ckpt = s"${graft.Scratch.root}/graft_ckpt/late-" +
-          java.util.UUID.randomUUID().toString.take(8)
-        try {
-          val q = agg.writeStream
-            .outputMode("append").format("memory").queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-          try q.processAllAvailable() finally q.stop()
-        } finally {
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-        }
-        val streamed = StreamingSmoke.drainSink(s, name)
+        val streamed = Replay.drain(agg, "append")
           .filter(!col("event_type").isin("sentinel", "heartbeat"))
           .groupBy("event_type").agg(sum("n").as("n_streamed"))
         val batch = graft.Tables.table(s, d, "events")

@@ -65,80 +65,26 @@ object StatefulBandIndex extends QueryModule {
     StructField("lang", StringType), StructField("source", StringType),
     StructField("n_chars", LongType)))
 
-  /** Two-batch replay of documents.parquet (doc_id parity split) so
-    * the cross-batch probe path genuinely exercises carried state —
-    * the StatefulSession.replayDir discipline: fingerprint-keyed
-    * cache, atomic rename, single-file batches with forced mtimes.
+  /** Two-batch replay of documents.parquet (see Replay.replay), split
+    * by doc_id parity, so the cross-batch probe path genuinely
+    * exercises carried state.
     */
-  private[graft] def replayDocsDir(s: SparkSession, d: String): String = {
-    val src = new java.io.File(d, "documents.parquet")
-    val desc =
-      s"${src.getAbsolutePath}|${src.length}|${src.lastModified}|docs-v1"
-    val fp = java.security.MessageDigest.getInstance("MD5")
-      .digest(desc.getBytes("UTF-8")).take(6).map(b => f"$b%02x")
-      .mkString
-    val dir =
-      new java.io.File(s"${graft.Scratch.root}/graft_replay_docs/$fp")
-    val complete = new java.io.File(dir, "batch0.parquet").exists() &&
-      new java.io.File(dir, "batch1.parquet").exists()
-    if (!complete) {
-      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  private[graft] def replayDocsDir(s: SparkSession, d: String): String =
+    Replay.replay(s, d, "documents.parquet", "docs-v1", batches = 2) {
       val raw = s.read.schema(docsSchema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
-      val tmp = new java.io.File(
-        s"${graft.Scratch.root}/graft_replay_docs/.tmp-$fp-" +
-          java.util.UUID.randomUUID().toString.take(8))
-      tmp.mkdirs()
-      def writeOne(df: DataFrame, name: String, mtime: Long): Unit = {
-        val stage = new java.io.File(tmp, s".stage_$name")
-        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = stage.listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(tmp, name)
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        org.apache.commons.io.FileUtils.deleteDirectory(stage)
-        dest.setLastModified(mtime)
-        ()
-      }
-      val t0 = src.lastModified()
-      writeOne(raw.filter(col("doc_id") % 2 === 0), "batch0.parquet", t0)
-      writeOne(raw.filter(col("doc_id") % 2 === 1), "batch1.parquet",
-        t0 + 60000L)
-      if (!dir.getParentFile.exists()) dir.getParentFile.mkdirs()
-      if (!tmp.renameTo(dir)) {
-        // Two ways a rename fails: a concurrent builder won (dir is
-        // now complete — use its result), or something else went
-        // wrong (cross-device scratch root, stale partial dir) and
-        // dir is missing or incomplete. The latter must fail LOUDLY
-        // here, not as an empty replay read downstream (r18 ADVICE).
-        org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-        val nowComplete =
-          new java.io.File(dir, "batch0.parquet").exists() &&
-            new java.io.File(dir, "batch1.parquet").exists()
-        if (!nowComplete)
-          throw new IllegalStateException(
-            s"replay build failed: rename $tmp -> $dir failed and " +
-              "the target lacks batch0/batch1.parquet — check that " +
-              s"${graft.Scratch.root} is writable and on the same " +
-              "filesystem as the scratch tmp dirs")
-      }
+      Seq(raw.filter(col("doc_id") % 2 === 0),
+        raw.filter(col("doc_id") % 2 === 1))
     }
-    dir.toString
-  }
 
   override def queries
       : Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_streaming_bandindex" -> ((s0, d) => {
-      // cloned session pins state partitions without touching
-      // the shared conf (see StreamingSmoke.sized)
-      val s = StreamingSmoke.sized(s0, "4")
+      val s = Replay.sized(s0, "4")
       import s.implicits._
       val replay = replayDocsDir(s, d)
       val toks = split(col("text"), " ")
-      val stream = s.readStream
-        .schema(docsSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay)
+      val stream = Replay.replayStream(s, replay, docsSchema)
         .select(col("doc_id"),
           posexplode(graft.functions.MinHashBandKeys(toks,
             graft.operators.Dedup.ShingleLen,
@@ -152,24 +98,10 @@ object StatefulBandIndex extends QueryModule {
       val out = stream.groupByKey(bd => (bd.band, bd.bkey))
         .flatMapGroupsWithState[BandState, CandPair](
           OutputMode.Append(), GroupStateTimeout.NoTimeout)(emitPairs)
-      val name = "graft_stream_bandidx_" +
-        java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/bandidx-" +
-        java.util.UUID.randomUUID().toString.take(8)
-      try {
-        val q = out.writeStream
-          .outputMode("append").format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(ckpt))
-      }
       // pairs colliding in several bands (or emitted by both the
       // cross and within paths of different bands) fold by distinct —
       // the same dedup the batch candidate relation applies
-      StreamingSmoke.drainSink(s, name)
+      Replay.drain(out, "append")
         .select(col("a_id"), col("b_id")).distinct()
         .orderBy("a_id", "b_id")
     })

@@ -1,11 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode}
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
-  StructType}
 
 import graft.QueryModule
 
@@ -86,42 +84,20 @@ object StatefulEwma extends QueryModule {
     out.result().iterator
   }
 
-  private val replaySchema = StructType(Seq(
-    StructField("ts_us", LongType), StructField("user_id", LongType),
-    StructField("value", DoubleType), StructField("event_id", LongType)))
-
   override def queries
       : Map[String, (SparkSession, String) => org.apache.spark.sql
         .DataFrame] = Map(
     "q_streaming_ewma" -> ((s0, d) => {
-      // cloned session pins state partitions without touching
-      // the shared conf (see StreamingSmoke.sized)
-      val s = StreamingSmoke.sized(s0, "2")
+      val s = Replay.sized(s0, "2")
       import s.implicits._
-      val stream = s.readStream
-        .schema(replaySchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(StatefulSession.replayDir(s, d))
+      val stream = Replay.replayStream(s, StatefulSession.replayDir(s, d))
+        .select("ts_us", "user_id", "value", "event_id")
         .as[EwmaEvent]
         .filter(_.user_id >= 0L) // drop the watermark sentinel ride-along
       val out = stream.groupByKey(_.user_id)
         .flatMapGroupsWithState[EwmaState, EwmaRow](
           OutputMode.Append(), GroupStateTimeout.NoTimeout)(smooth)
-      val name = "graft_stream_ewma_" +
-        java.util.UUID.randomUUID().toString.take(8)
-
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/ewma-" +
-        java.util.UUID.randomUUID().toString.take(8)
-      try {
-        val q = out.writeStream
-          .outputMode("append").format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-      }
-      StreamingSmoke.drainSink(s, name).orderBy("user_id", "event_id")
+      Replay.drain(out, "append").orderBy("user_id", "event_id")
     })
   )
 

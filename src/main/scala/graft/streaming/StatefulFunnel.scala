@@ -4,8 +4,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode}
-import org.apache.spark.sql.types.{LongType, StringType, StructField,
-  StructType}
 
 import graft.QueryModule
 
@@ -61,23 +59,13 @@ object StatefulFunnel extends QueryModule {
     out.result().iterator
   }
 
-  private val replaySchema = StructType(Seq(
-    StructField("ts_us", LongType), StructField("user_id", LongType),
-    StructField("event_id", LongType),
-    StructField("event_type", StringType)))
-
   override def queries
       : Map[String, (SparkSession, String) => org.apache.spark.sql
         .DataFrame] = Map(
     "q_streaming_funnel" -> ((s0, d) => {
-      // cloned session pins state partitions without touching
-      // the shared conf (see StreamingSmoke.sized)
-      val s = StreamingSmoke.sized(s0, "2")
+      val s = Replay.sized(s0, "2")
       import s.implicits._
-      val stream = s.readStream
-        .schema(replaySchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(StatefulSession.replayDir(s, d))
+      val stream = Replay.replayStream(s, StatefulSession.replayDir(s, d))
         .select(col("user_id"), col("ts_us"), col("event_id"),
           col("event_type"))
         .as[(Long, Long, Long, String)]
@@ -86,25 +74,12 @@ object StatefulFunnel extends QueryModule {
       val out = stream.groupByKey(_.user_id)
         .flatMapGroupsWithState[FunnelState, FunnelRow](
           OutputMode.Append(), GroupStateTimeout.NoTimeout)(advance)
-      val name = "graft_stream_funnel_" +
-        java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/funnel-" +
-        java.util.UUID.randomUUID().toString.take(8)
-      try {
-        val q = out.writeStream
-          .outputMode("append").format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-      }
       // keep-latest collapse of the monotone revisions, then render
       // exactly the batch q_funnel shape
       val fmt = (c: org.apache.spark.sql.Column) =>
         date_format(timestamp_micros(c.cast("long")),
           "yyyy-MM-dd HH:mm:ss.SSSSSS")
-      StreamingSmoke.drainSink(s, name)
+      Replay.drain(out, "append")
         .groupBy("user_id")
         .agg(max(struct(col("rev"), col("t1_us"), col("t2_us"),
           col("t3_us"))).as("f"))

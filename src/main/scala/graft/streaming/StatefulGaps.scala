@@ -4,7 +4,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode}
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.QueryModule
 
@@ -52,43 +51,22 @@ object StatefulGaps extends QueryModule {
     Iterator(GapDelta(user, evs.length.toLong, b30, b60, b120))
   }
 
-  private val replaySchema = StructType(Seq(
-    StructField("ts_us", LongType), StructField("user_id", LongType),
-    StructField("event_id", LongType)))
-
   override def queries
       : Map[String, (SparkSession, String) => org.apache.spark.sql
         .DataFrame] = Map(
     "q_streaming_gapsweep" -> ((s0, d) => {
-      // cloned session pins state partitions without touching
-      // the shared conf (see StreamingSmoke.sized)
-      val s = StreamingSmoke.sized(s0, "2")
+      val s = Replay.sized(s0, "2")
       import s.implicits._
-      val stream = s.readStream
-        .schema(replaySchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(StatefulSession.replayDir(s, d))
+      val stream = Replay.replayStream(s, StatefulSession.replayDir(s, d))
+        .select("ts_us", "user_id", "event_id")
         .as[GapEvent]
         .filter(_.user_id >= 0L) // drop the watermark sentinel ride-along
       val out = stream.groupByKey(_.user_id)
         .flatMapGroupsWithState[GapState, GapDelta](
           OutputMode.Append(), GroupStateTimeout.NoTimeout)(deltas)
-      val name = "graft_stream_gaps_" +
-        java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/gaps-" +
-        java.util.UUID.randomUUID().toString.take(8)
-      try {
-        val q = out.writeStream
-          .outputMode("append").format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-      }
       // the drained deltas sum to the batch one-window counters; the
       // stack + division tail is the batch query's own
-      StreamingSmoke.drainSink(s, name)
+      Replay.drain(out, "append")
         .agg(sum("n_events").as("n_events"),
           countDistinct("user_id").as("n_users"),
           sum("b30").as("b30"), sum("b60").as("b60"),

@@ -3,8 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode}
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
-  StructType}
 
 import graft.QueryModule
 
@@ -76,42 +74,20 @@ object StatefulLag extends QueryModule {
     out.result().iterator
   }
 
-  private val replaySchema = StructType(Seq(
-    StructField("ts_us", LongType), StructField("user_id", LongType),
-    StructField("value", DoubleType), StructField("event_id", LongType)))
-
   override def queries
       : Map[String, (SparkSession, String) => org.apache.spark.sql
         .DataFrame] = Map(
     "q_streaming_lagfeat" -> ((s0, d) => {
-      // cloned session pins state partitions without touching
-      // the shared conf (see StreamingSmoke.sized)
-      val s = StreamingSmoke.sized(s0, "2")
+      val s = Replay.sized(s0, "2")
       import s.implicits._
-      val stream = s.readStream
-        .schema(replaySchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(StatefulSession.replayDir(s, d))
+      val stream = Replay.replayStream(s, StatefulSession.replayDir(s, d))
+        .select("ts_us", "user_id", "value", "event_id")
         .as[LagEvent]
         .filter(_.user_id >= 0L) // drop the watermark sentinel ride-along
       val out = stream.groupByKey(_.user_id)
         .flatMapGroupsWithState[LagState, LagRow](
           OutputMode.Append(), GroupStateTimeout.NoTimeout)(features)
-      val name = "graft_stream_lag_" +
-        java.util.UUID.randomUUID().toString.take(8)
-
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/lag-" +
-        java.util.UUID.randomUUID().toString.take(8)
-      try {
-        val q = out.writeStream
-          .outputMode("append").format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-      }
-      StreamingSmoke.drainSink(s, name).orderBy("event_id")
+      Replay.drain(out, "append").orderBy("event_id")
     })
   )
 

@@ -3,8 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode}
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType,
-  StructField, StructType}
 
 import graft.QueryModule
 
@@ -65,43 +63,20 @@ object StatefulPit extends QueryModule {
     out.result().iterator
   }
 
-  private val replaySchema = StructType(Seq(
-    StructField("ts_us", LongType), StructField("user_id", LongType),
-    StructField("value", DoubleType), StructField("event_id", LongType),
-    StructField("event_type", StringType)))
-
   override def queries
       : Map[String, (SparkSession, String) => org.apache.spark.sql
         .DataFrame] = Map(
     "q_streaming_pit" -> ((s0, d) => {
-      // cloned session pins state partitions without touching
-      // the shared conf (see StreamingSmoke.sized)
-      val s = StreamingSmoke.sized(s0, "2")
+      val s = Replay.sized(s0, "2")
       import s.implicits._
-      val stream = s.readStream
-        .schema(replaySchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(StatefulSession.replayDir(s, d))
+      val stream = Replay.replayStream(s, StatefulSession.replayDir(s, d))
         .as[PitEvent]
         .filter((e: PitEvent) => e.user_id >= 0L &&
           Seq("view", "click", "purchase").contains(e.event_type))
       val out = stream.groupByKey(_.user_id)
         .flatMapGroupsWithState[PitState, PitRow](
           OutputMode.Append(), GroupStateTimeout.NoTimeout)(serve)
-      val name = "graft_stream_pit_" +
-        java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/pit-" +
-        java.util.UUID.randomUUID().toString.take(8)
-      try {
-        val q = out.writeStream
-          .outputMode("append").format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-      }
-      StreamingSmoke.drainSink(s, name).orderBy("event_id")
+      Replay.drain(out, "append").orderBy("event_id")
     })
   )
 

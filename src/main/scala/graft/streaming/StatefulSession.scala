@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.QueryModule
 
@@ -110,80 +109,33 @@ object StatefulSession extends QueryModule {
     closed.reverseIterator.map(emit(user, _))
   }
 
-  /** Materialize the multi-batch replay of `events.parquet` on tmpfs:
-    * two time-split halves (so the inter-batch watermark advance fires
-    * mid-stream timeouts) plus the sentinel file, modification times
-    * forcing replay order. Cache key = source fingerprint (path, size,
-    * mtime) so a regenerated source misses the cache; built atomically
-    * via rename.
+  /** The multi-batch replay of `events.parquet` (see Replay.replay):
+    * two time-split halves, so the inter-batch watermark advance fires
+    * mid-stream timeouts.
     */
-  private[graft] def replayDir(s: SparkSession, d: String): String = {
-    val src = new java.io.File(d, "events.parquet")
+  private[graft] def replayDir(s: SparkSession, d: String): String =
     // |v2: replay schema grew event_id/event_type (consumers project a
     // subset, so v1 readers would work — but v1 FILES lack the columns)
-    val desc = s"${src.getAbsolutePath}|${src.length}|${src.lastModified}|v2"
-    val fp = java.security.MessageDigest.getInstance("MD5")
-      .digest(desc.getBytes("UTF-8")).take(6).map(b => f"$b%02x").mkString
-    val dir = new java.io.File(s"${graft.Scratch.root}/graft_replay/$fp")
-    // The dir only ever appears via atomic rename of a fully-built temp,
-    // but tmpfs eviction can still hollow it out afterwards — verify both
-    // replay batches are present before trusting the cache.
-    val complete = new java.io.File(dir, "batch0.parquet").exists() &&
-      new java.io.File(dir, "batch1.parquet").exists()
-    if (!complete) {
-      org.apache.commons.io.FileUtils.deleteQuietly(dir)
-      val schema = graft.Tables.rawEventsSchema(s, d)
-      val raw = graft.Tables.normalizeEventTs(
-        s.read.schema(schema).option("pathGlobFilter", "events.parquet")
-          .parquet(d))
-        .select(unix_micros(col("ts")).as("ts_us"), col("user_id"),
-          col("value"), col("event_id"), col("event_type"))
+    Replay.replay(s, d, "events.parquet", "v2", batches = 2) {
+      val raw = Replay.eventRows(s, d)
       val Row(mn: Long, mx: Long) = raw.agg(min("ts_us"), max("ts_us")).head()
       val mid = mn + (mx - mn) / 2
-      val tmp = new java.io.File(s"${graft.Scratch.root}/graft_replay/.tmp-$fp-" +
-        java.util.UUID.randomUUID().toString.take(8))
-      tmp.mkdirs()
-      def writeOne(df: DataFrame, name: String, mtime: Long): Unit = {
-        val stage = new java.io.File(tmp, s".stage_$name")
-        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(tmp, name)
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        org.apache.commons.io.FileUtils.deleteDirectory(stage)
-        dest.setLastModified(mtime)
-      }
-      val t0 = src.lastModified()
-      import s.implicits._
       // The sentinel rides in the LAST data file (not its own batch):
       // its event time advances the watermark at end-of-batch1, so the
       // single trailing no-data batch flushes every open tail — three
       // microbatches total instead of four.
       val sentinelTs = mx + 100L * 86400L * 1000000L // 100 days past the end
-      val sentinel = Seq((sentinelTs, SentinelUser, 0.0d, -1L, "sentinel"))
-        .toDF("ts_us", "user_id", "value", "event_id", "event_type")
-      writeOne(raw.filter(col("ts_us") < mid), "batch0.parquet", t0)
-      writeOne(raw.filter(col("ts_us") >= mid).unionAll(sentinel),
-        "batch1.parquet", t0 + 60000L)
-      if (!tmp.renameTo(dir)) // lost a concurrent-build race: theirs is equivalent
-        org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+      Seq(raw.filter(col("ts_us") < mid),
+        raw.filter(col("ts_us") >= mid)
+          .unionAll(Replay.marker(s, sentinelTs, SentinelUser, "sentinel")))
     }
-    dir.toString
-  }
-
-  private val replaySchema = StructType(Seq(
-    StructField("ts_us", LongType), StructField("user_id", LongType),
-    StructField("value", DoubleType)))
 
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_streaming_session" -> ((s0, d) => {
-      // cloned session pins state partitions without touching
-      // the shared conf (see StreamingSmoke.sized)
-      val s = StreamingSmoke.sized(s0, "2")
+      val s = Replay.sized(s0, "2")
       import s.implicits._
-      val stream = s.readStream
-        .schema(replaySchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replayDir(s, d))
+      val stream = Replay.replayStream(s, replayDir(s, d))
+        .select("ts_us", "user_id", "value")
         .withColumn("ts", expr("timestamp_micros(ts_us)"))
         .withWatermark("ts", "0 seconds")
         .as[SessEvent]
@@ -191,21 +143,7 @@ object StatefulSession extends QueryModule {
         .flatMapGroupsWithState[OpenSession, SessionRow](
           OutputMode.Append(), GroupStateTimeout.EventTimeTimeout)(sessionize)
         .filter(col("user_id") =!= SentinelUser)
-      val name = "graft_stream_session_" +
-        java.util.UUID.randomUUID().toString.take(8)
-
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/sess-" +
-        java.util.UUID.randomUUID().toString.take(8)
-      try {
-        val q = out.writeStream
-          .outputMode("append").format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-      }
-      StreamingSmoke.drainSink(s, name).orderBy("user_id", "s_start")
+      Replay.drain(out, "append").orderBy("user_id", "s_start")
     }),
 
     // --- the same sessionization through Spark's NATIVE streaming
@@ -218,16 +156,11 @@ object StatefulSession extends QueryModule {
     // batch all land on one hash. State is per-open-session (bounded
     // by active users), shuffle keyed on user_id. ---
     "q_streaming_sessionwin" -> ((s0, d) => {
-      // cloned session pins state partitions without touching
-      // the shared conf (see StreamingSmoke.sized)
-      val s = StreamingSmoke.sized(s0, "2")
+      val s = Replay.sized(s0, "2")
       import graft.Det.{fmtTs, sumd}
       import org.apache.spark.sql.functions.{col, count, expr, lit,
         session_window}
-      val stream = s.readStream
-        .schema(replaySchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replayDir(s, d))
+      val stream = Replay.replayStream(s, replayDir(s, d))
         .withColumn("ts", expr("timestamp_micros(ts_us)"))
         .withWatermark("ts", "0 seconds")
       // The sentinel filter must NOT ride in the streaming plan: as a
@@ -243,20 +176,7 @@ object StatefulSession extends QueryModule {
           fmtTs(col("session_window.start")).as("s_start"),
           fmtTs(col("session_window.end")).as("s_end"),
           col("n"), col("sum_value"))
-      val name = "graft_stream_sessionwin_" +
-        java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/sessw-" +
-        java.util.UUID.randomUUID().toString.take(8)
-      try {
-        val q = out.writeStream
-          .outputMode("append").format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-      }
-      StreamingSmoke.drainSink(s, name)
+      Replay.drain(out, "append")
         .filter(col("user_id") =!= SentinelUser)
         .orderBy("user_id", "s_start")
     })

@@ -4,8 +4,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   OutputMode}
-import org.apache.spark.sql.types.{LongType, StringType, StructField,
-  StructType}
 
 import graft.QueryModule
 import graft.operators.Experiments.{SprtFail, SprtSucc, SprtThresh}
@@ -83,11 +81,6 @@ object StatefulSprt extends QueryModule {
     out.result().iterator
   }
 
-  private val replaySchema = StructType(Seq(
-    StructField("ts_us", LongType), StructField("user_id", LongType),
-    StructField("event_id", LongType),
-    StructField("event_type", StringType)))
-
   // 2024-01-01T00:00:00Z in epoch micros (the day-grid origin the
   // batch twin derives via datediff)
   private val DayZeroUs = 1704067200000000L
@@ -96,14 +89,9 @@ object StatefulSprt extends QueryModule {
       : Map[String, (SparkSession, String) => org.apache.spark.sql
         .DataFrame] = Map(
     "q_streaming_sprt" -> ((s0, d) => {
-      // cloned session pins state partitions without touching
-      // the shared conf (see StreamingSmoke.sized)
-      val s = StreamingSmoke.sized(s0, "2")
+      val s = Replay.sized(s0, "2")
       import s.implicits._
-      val stream = s.readStream
-        .schema(replaySchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(StatefulSession.replayDir(s, d))
+      val stream = Replay.replayStream(s, StatefulSession.replayDir(s, d))
         .select(col("ts_us"), col("user_id"), col("event_type"))
         .as[(Long, Long, String)]
         .flatMap { case (tsUs, user, typ) =>
@@ -119,20 +107,7 @@ object StatefulSprt extends QueryModule {
       val out = stream.groupByKey(_.arm)
         .flatMapGroupsWithState[SprtState, SprtRow](
           OutputMode.Append(), GroupStateTimeout.NoTimeout)(advance)
-      val name = "graft_stream_sprt_" +
-        java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/sprt-" +
-        java.util.UUID.randomUUID().toString.take(8)
-      try {
-        val q = out.writeStream
-          .outputMode("append").format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-      }
-      StreamingSmoke.drainSink(s, name).orderBy("arm", "day")
+      Replay.drain(out, "append").orderBy("arm", "day")
     })
   )
 

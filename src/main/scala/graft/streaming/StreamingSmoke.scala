@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * same event-time tumbling-window aggregation as `q_window_tumbling`,
   * but driven through `readStream` -> watermark -> windowed agg ->
   * memory sink. The file source replays the batch parquet as a stream;
-  * `processAllAvailable()` makes it synchronous for the harness.
+  * `Replay.drain` runs it to the end of its input for the harness.
   *
   * At scale the identical plan runs continuously against a file/Kafka
   * source with `outputMode("append")` + watermark-based state eviction;
@@ -18,94 +18,16 @@ import org.apache.spark.sql.functions._
   */
 object StreamingSmoke extends QueryModule {
 
-  /** Per-query CLONED session with the streaming state-partition
-    * sizing applied. Structured Streaming pins the state-store
-    * partition count from spark.sql.shuffle.partitions at the first
-    * run against a fresh checkpoint, and each state partition carries
-    * its own store init + per-commit overhead — so the twins size it
-    * to the state (a handful of keys), not the CPU count. Round 13:
-    * the sizing moves off the shared session's conf (the former
-    * set/try/finally was visible to every concurrently-running query)
-    * onto a clone that owns the whole plan, readStream through drain;
-    * the memory-sink temp view registers in the clone, so callers
-    * must drain from the SAME session this returns. At fleet scale the
-    * knob would instead be sized to executors x cores.
-    */
-  private[streaming] def sized(s: SparkSession, parts: String)
-      : SparkSession = {
-    val ss = org.apache.spark.sql.graft.Bridge.cloneSession(s)
-    ss.conf.set("spark.sql.shuffle.partitions", parts)
-    // a clone gets its OWN StreamingQueryManager, so observability
-    // registered on the parent (StreamMicrobatchProfile's progress
-    // listener; any production metrics hook) would silently miss every
-    // sized twin's micro-batches — carry the parent's listeners over
-    val already = ss.streams.listListeners.toSet
-    s.streams.listListeners
-      .filterNot(already.contains)
-      .foreach(ss.streams.addListener)
-    ss
-  }
-
-  /** Drain a memory sink: materialize the sink's rows (localCheckpoint —
-    * the result no longer references the view), then DROP the temp view.
-    * Per-run UUID sink names otherwise accumulate one fully-materialized
-    * result table per invocation in the driver for the session lifetime
-    * (Bench alone runs every streaming query twice). Must be called with
-    * the SAME session that started the query (the sized() clone).
-    */
-  private[streaming] def drainSink(s: SparkSession, name: String)
-      : DataFrame = {
-    val out = s.table(name).localCheckpoint()
-    s.catalog.dropTempView(name)
-    out
-  }
-
-  /** Run a started stream to completion, then stop it and delete its
-    * checkpoint dir — ALL inside finally nesting, so a failed replay (or
-    * even a failing stop()) never leaks a tmpfs checkpoint. One
-    * definition for every streaming query body below.
-    */
-  private def runThenClean(q: org.apache.spark.sql.streaming.StreamingQuery,
-      ckpt: String): Unit =
-    try q.processAllAvailable() finally {
-      try q.stop() finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-      }
-    }
-
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_streaming_rate" -> ((s0, d) => {
-      // cloned session pins state partitions without touching
-      // the shared conf (see StreamingSmoke.sized)
-      val s = StreamingSmoke.sized(s0, "4")
-      val schema = graft.Tables.rawEventsSchema(s, d)
-      val stream = graft.Tables.normalizeEventTs(s.readStream
-        .schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(d))
-      val agg = stream
+      val s = Replay.sized(s0, "4")
+      val agg = Replay.events(s, d)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"), sumd(col("value")).as("sum_value"))
         .select(fmtTs(col("window.start")).as("hour_start"),
           col("event_type"), col("n"), col("sum_value"))
-      val name = "graft_stream_smoke_" +
-        java.util.UUID.randomUUID().toString.take(8)
-      // checkpoint + state store on tmpfs: the default temp checkpoint
-      // lands on the (stall-prone) block device and is pure harness
-      // overhead for a replay smoke
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/rate-" +
-        java.util.UUID.randomUUID().toString.take(8)
-      try {
-        val q = agg.writeStream
-          .outputMode("complete").format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-      }
-      drainSink(s, name).orderBy("hour_start", "event_type")
+      Replay.drain(agg, "complete").orderBy("hour_start", "event_type")
     })
     ,
 
@@ -117,29 +39,9 @@ object StreamingSmoke extends QueryModule {
     // telemetry contract). The streamed leg is the running count;
     // state is O(types). Carries a full batch DuckDB oracle. ---
     "q_streaming_dp" -> ((s0, d) => {
-      // cloned session pins state partitions without touching
-      // the shared conf (see StreamingSmoke.sized)
-      val s = StreamingSmoke.sized(s0, "4")
-      val schema = graft.Tables.rawEventsSchema(s, d)
-      val stream = graft.Tables.normalizeEventTs(s.readStream
-        .schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(d))
-      val agg = stream.groupBy("event_type")
+      val s = Replay.sized(s0, "4")
+      val agg = Replay.events(s, d).groupBy("event_type")
         .agg(count(lit(1)).as("n_true"))
-      val name = "graft_stream_dp_" +
-        java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/dp-" +
-        java.util.UUID.randomUUID().toString.take(8)
-      try {
-        val q = agg.writeStream
-          .outputMode("complete").format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-      }
       val h = pmod(ascii(col("event_type")).cast("long")
         * lit(2654435761L), lit(2147483648L))
       val tz = when(pmod(h, lit(2L)) === 1, 0L)
@@ -151,7 +53,7 @@ object StreamingSmoke extends QueryModule {
         .when(pmod(h, lit(128L)) === 64, 6L)
         .otherwise(7L)
       val sign = when(h.bitwiseAND(lit(256L)) === 0, 1L).otherwise(-1L)
-      drainSink(s, name)
+      Replay.drain(agg, "complete")
         .select(col("event_type"), col("n_true"),
           (col("n_true") + sign * tz).cast("long").as("noisy_count"),
           lit(0.6931).as("epsilon"))
@@ -170,34 +72,12 @@ object StreamingSmoke extends QueryModule {
     // watermark is evicted instead of growing without bound; the bounded
     // replay here would make that a no-op. ---
     "q_streaming_dedup" -> ((s0, d) => {
-      // cloned session pins state partitions without touching
-      // the shared conf (see StreamingSmoke.sized)
-      val s = StreamingSmoke.sized(s0, "4")
-      val schema = graft.Tables.rawEventsSchema(s, d)
-      val stream = graft.Tables.normalizeEventTs(s.readStream
-        .schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(d))
-      val dedup = stream
+      val s = Replay.sized(s0, "4")
+      val dedup = Replay.events(s, d)
         .withWatermark("ts", "1 hour")
         .dropDuplicates("user_id", "event_type")
         .select(col("user_id"), col("event_type"))
-      // per-run name: same concurrent-invocation isolation as the
-      // sketch streams (a fixed name collides on start())
-      val name = "graft_stream_dedup_" +
-        java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/dedup-" +
-        java.util.UUID.randomUUID().toString.take(8)
-      try {
-        val q = dedup.writeStream
-          .outputMode("append").format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-      }
-      drainSink(s, name)
+      Replay.drain(dedup, "append")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_users"))
         .orderBy("event_type")
@@ -216,11 +96,7 @@ object StreamingSmoke extends QueryModule {
       // stats side shared with the batch sweep (one definition, one
       // oracle — see Scoring.anomalyStats)
       val st = graft.operators.Scoring.anomalyStats(s, d)
-      val schema = graft.Tables.rawEventsSchema(s, d)
-      val stream = s.readStream
-        .schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(d)
+      val stream = Replay.events(s, d)
         .select(col("event_id"), col("event_type"), col("value"),
           round(col("value"), 0).cast("long").as("vq"))
       val flagged = stream.join(broadcast(st), "event_type")
@@ -228,16 +104,7 @@ object StreamingSmoke extends QueryModule {
           (col("vq").cast("double") - col("mean")) / col("sigma"))
         .filter(col("sigma") > 0.0 && abs(col("z")) > 3.0)
         .select(col("event_id"), col("event_type"), col("value"), col("z"))
-      val name = "graft_stream_anom_" +
-        java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/anom-" +
-        java.util.UUID.randomUUID().toString.take(8)
-      val q = flagged.writeStream
-        .outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
-      runThenClean(q, ckpt)
-      drainSink(s, name).orderBy("event_id")
+      Replay.drain(flagged, "append").orderBy("event_id")
     }),
 
     // --- watermarked stream-stream interval join: views joined to the
@@ -250,38 +117,18 @@ object StreamingSmoke extends QueryModule {
     // deterministic and hash-oracle-checkable against the equivalent
     // batch interval join. ---
     "q_streaming_join" -> ((s0, d) => {
-      // cloned session pins state partitions without touching
-      // the shared conf (see StreamingSmoke.sized)
-      val s = StreamingSmoke.sized(s0, "4")
-      val schema = graft.Tables.rawEventsSchema(s, d)
-      def src = graft.Tables.normalizeEventTs(s.readStream
-        .schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(d))
-      val views = src.filter(col("event_type") === "view")
+      val s = Replay.sized(s0, "4")
+      val views = Replay.events(s, d).filter(col("event_type") === "view")
         .select(col("user_id").as("v_user"), col("ts").as("v_ts"))
         .withWatermark("v_ts", "1 hour")
-      val clicks = src.filter(col("event_type") === "click")
+      val clicks = Replay.events(s, d).filter(col("event_type") === "click")
         .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
         .withWatermark("c_ts", "1 hour")
       val joined = views.join(clicks,
         col("v_user") === col("c_user") &&
           col("c_ts") >= col("v_ts") &&
           col("c_ts") <= col("v_ts") + expr("INTERVAL 10 MINUTES"))
-      val name = "graft_stream_join_" +
-        java.util.UUID.randomUUID().toString.take(8)
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/join-" +
-        java.util.UUID.randomUUID().toString.take(8)
-      try {
-        val q = joined.writeStream
-          .outputMode("append").format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-      }
-      drainSink(s, name)
+      Replay.drain(joined, "append")
         .groupBy(col("v_user").as("user_id"))
         .agg(count(lit(1)).as("n_pairs"))
         .orderBy("user_id")
@@ -313,15 +160,9 @@ object StreamingSmoke extends QueryModule {
       val stateRoot = new java.io.File(root,
         "run-" + java.util.UUID.randomUUID().toString.take(8))
       stateRoot.mkdirs()
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/upsert-" +
-        java.util.UUID.randomUUID().toString.take(8)
       val w = Window.partitionBy("user_id", "event_type")
         .orderBy(col("ts_us").desc, col("event_id").desc)
-      val q = s.readStream
-        .schema("ts_us LONG, user_id LONG, value DOUBLE, " +
-          "event_id LONG, event_type STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay)
+      Replay.run(Replay.replayStream(s, replay)
         .writeStream
         .foreachBatch { (batch: DataFrame, id: Long) =>
           val latest = batch.filter(col("user_id") =!= -1L)
@@ -336,10 +177,7 @@ object StreamingSmoke extends QueryModule {
             .coalesce(1).write.mode("overwrite")
             .parquet(new java.io.File(stateRoot, s"v${id + 1}").toString)
           ()
-        }
-        .option("checkpointLocation", ckpt)
-        .start()
-      runThenClean(q, ckpt)
+        })
       val last = stateRoot.listFiles().filter(_.getName.startsWith("v"))
         .maxBy(_.getName.drop(1).toInt)
       s.read.parquet(last.toString)
@@ -360,25 +198,11 @@ object StreamingSmoke extends QueryModule {
     // cardinality. ---
     "q_streaming_cms" -> ((s, d) => {
       val replay = StatefulSession.replayDir(s, d)
-      // per-run memory-sink name: a fixed name would make two concurrent
-      // invocations in one session collide on start() (or read each
-      // other's table) — same isolation rule as the checkpoint dir
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val name = s"graft_stream_cms_$run"
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/cms-$run"
-      val q = s.readStream
-        .schema("ts_us LONG, user_id LONG, value DOUBLE, " +
-          "event_id LONG, event_type STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay)
+      val sketch = Replay.replayStream(s, replay)
         .filter(col("user_id") =!= -1L)
         .agg(graft.functions.CountMin.agg(col("user_id")).as("sk"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
-      runThenClean(q, ckpt)
-      val sk = drainSink(s, name).head().getAs[Array[Byte]]("sk")
+      val sk = Replay.drain(sketch, "complete").head()
+        .getAs[Array[Byte]]("sk")
       table(s, d, "events")
         .groupBy("user_id").agg(count(lit(1)).as("exact_n"))
         .orderBy(col("exact_n").desc, col("user_id")).limit(10)
@@ -398,14 +222,7 @@ object StreamingSmoke extends QueryModule {
     // ---
     "q_streaming_ohlc" -> ((s, d) => {
       val replay = StatefulSession.replayDir(s, d)
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val name = s"graft_stream_ohlc_$run"
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/ohlc-$run"
-      val q = s.readStream
-        .schema("ts_us LONG, user_id LONG, value DOUBLE, " +
-          "event_id LONG, event_type STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay)
+      val candles = Replay.replayStream(s, replay)
         .filter(col("user_id") =!= -1L)
         .select(col("event_type"),
           expr("ts_us div 3600000000").as("hr"),
@@ -419,12 +236,7 @@ object StreamingSmoke extends QueryModule {
           min(col("v")).cast("double").as("low"),
           max_by(col("v"), struct(col("us"), col("event_id")))
             .cast("double").as("close"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
-      runThenClean(q, ckpt)
-      drainSink(s, name).orderBy("event_type", "hr")
+      Replay.drain(candles, "complete").orderBy("event_type", "hr")
     }),
 
     // --- streamed change-point maintenance (round 10): the daily
@@ -439,24 +251,12 @@ object StreamingSmoke extends QueryModule {
     // carries the IDENTICAL oracle. ---
     "q_streaming_binseg" -> ((s, d) => {
       val replay = StatefulSession.replayDir(s, d)
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val name = s"graft_stream_binseg_$run"
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/binseg-$run"
-      val q = s.readStream
-        .schema("ts_us LONG, user_id LONG, value DOUBLE, " +
-          "event_id LONG, event_type STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay)
+      val grid = Replay.replayStream(s, replay)
         .filter(col("user_id") =!= -1L)
         .groupBy(expr("ts_us div 86400000000 - 19723").as("day"))
         .agg(count(lit(1)).as("x"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
-      runThenClean(q, ckpt)
       graft.operators.Diagnostics.binsegOverDays(
-        drainSink(s, name).select("day", "x"))
+        Replay.drain(grid, "complete").select("day", "x"))
     }),
 
     // --- streamed distinct-count maintenance: the HLL register
@@ -472,24 +272,12 @@ object StreamingSmoke extends QueryModule {
     // estimate over the sentinel-filtered events relation). ---
     "q_streaming_hll" -> ((s, d) => {
       val replay = StatefulSession.replayDir(s, d)
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val name = s"graft_stream_hll_$run"
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/hll-$run"
-      val q = s.readStream
-        .schema("ts_us LONG, user_id LONG, value DOUBLE, " +
-          "event_id LONG, event_type STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay)
+      val sketches = Replay.replayStream(s, replay)
         .filter(col("user_id") =!= -1L)
         .groupBy("event_type")
         .agg(graft.functions.HyperLogLog.sketch(col("user_id")).as("sk"),
           count(lit(1)).as("n_events"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
-      runThenClean(q, ckpt)
-      drainSink(s, name)
+      Replay.drain(sketches, "complete")
         .select(col("event_type"),
           graft.functions.HyperLogLog.estimate(col("sk"))
             .as("approx_users"), col("n_events"))
@@ -506,24 +294,12 @@ object StreamingSmoke extends QueryModule {
     // the same rows — impossible for a t-digest/KLL. ---
     "q_streaming_hdr" -> ((s, d) => {
       val replay = StatefulSession.replayDir(s, d)
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val name = s"graft_stream_hdr_$run"
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/hdr-$run"
-      val q = s.readStream
-        .schema("ts_us LONG, user_id LONG, value DOUBLE, " +
-          "event_id LONG, event_type STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay)
+      val hists = Replay.replayStream(s, replay)
         .filter(col("user_id") =!= -1L)
         .groupBy("event_type")
         .agg(graft.functions.HdrHistogram.agg(col("value"),
           Seq(0.5, 0.9, 0.99)).as("qs"), count(lit(1)).as("n"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
-      runThenClean(q, ckpt)
-      drainSink(s, name)
+      Replay.drain(hists, "complete")
         .select(col("event_type"), element_at(col("qs"), 1).as("p50"),
           element_at(col("qs"), 2).as("p90"),
           element_at(col("qs"), 3).as("p99"), col("n"))
@@ -543,14 +319,7 @@ object StreamingSmoke extends QueryModule {
     "q_streaming_bitmap" -> ((s, d) => {
       import graft.functions.BitmapAgg.{andCardinality, bitmap, cardinality}
       val replay = StatefulSession.replayDir(s, d)
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val name = s"graft_stream_bitmap_$run"
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/bitmap-$run"
-      val q = s.readStream
-        .schema("ts_us LONG, user_id LONG, value DOUBLE, " +
-          "event_id LONG, event_type STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay)
+      val bitmaps = Replay.replayStream(s, replay)
         .filter(col("event_type").isin("view", "purchase"))
         .groupBy(floor(col("user_id") / 1024.0).cast("long").as("bkt"))
         .agg(
@@ -558,12 +327,7 @@ object StreamingSmoke extends QueryModule {
             pmod(col("user_id"), lit(1024L)))).as("bm_view"),
           bitmap(when(col("event_type") === "purchase",
             pmod(col("user_id"), lit(1024L)))).as("bm_buy"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
-      runThenClean(q, ckpt)
-      drainSink(s, name)
+      Replay.drain(bitmaps, "complete")
         .select(col("bkt"),
           cardinality(col("bm_view")).as("n_view"),
           cardinality(col("bm_buy")).as("n_buy"),
@@ -584,25 +348,13 @@ object StreamingSmoke extends QueryModule {
     // of an unbounded event stream at O(groups * k) memory. ---
     "q_streaming_reservoir" -> ((s, d) => {
       val replay = StatefulSession.replayDir(s, d)
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val name = s"graft_stream_rsv_$run"
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/rsv-$run"
-      val q = s.readStream
-        .schema("ts_us LONG, user_id LONG, value DOUBLE, " +
-          "event_id LONG, event_type STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay)
+      val samples = Replay.replayStream(s, replay)
         .filter(col("user_id") =!= -1L)
         .groupBy("event_type")
         .agg(graft.functions.ReservoirTopK(
           md5(col("event_id").cast("string")), col("event_id"), 5)
           .as("sample"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
-      runThenClean(q, ckpt)
-      drainSink(s, name)
+      Replay.drain(samples, "complete")
         .select(col("event_type"),
           posexplode(col("sample")).as(Seq("pos", "event_id")))
         .select(col("event_type"), (col("pos") + 1).cast("long").as("rn"),
@@ -620,25 +372,13 @@ object StreamingSmoke extends QueryModule {
     // q_agg_topk. ---
     "q_streaming_topk" -> ((s, d) => {
       val replay = StatefulSession.replayDir(s, d)
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val name = s"graft_stream_topk_$run"
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/topk-$run"
-      val q = s.readStream
-        .schema("ts_us LONG, user_id LONG, value DOUBLE, " +
-          "event_id LONG, event_type STRING")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay)
+      val tops = Replay.replayStream(s, replay)
         .filter(col("user_id") =!= -1L)
         .groupBy("event_type")
         .agg(graft.functions.ExactTopK(
           round(col("value"), 0).cast("long"), col("event_id"), 5)
           .as("top"))
-        .writeStream.outputMode("complete").format("memory")
-        .queryName(name)
-        .option("checkpointLocation", ckpt)
-        .start()
-      runThenClean(q, ckpt)
-      drainSink(s, name)
+      Replay.drain(tops, "complete")
         .select(col("event_type"), posexplode(col("top")).as(Seq("pos", "p")))
         .select(col("event_type"), (col("pos") + 1).cast("long").as("rn"),
           col("p.v").as("vq"), col("p.id").as("event_id"))
@@ -656,33 +396,13 @@ object StreamingSmoke extends QueryModule {
     // the final counters deterministically equal to the batch SQL —
     // a real oracle, the q_streaming_rate discipline. ---
     "q_streaming_expect" -> ((s0, d) => {
-      // cloned session pins state partitions without touching
-      // the shared conf (see StreamingSmoke.sized)
-      val s = StreamingSmoke.sized(s0, "4")
-      val schema = graft.Tables.rawEventsSchema(s, d)
-      val stream = s.readStream
-        .schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(d)
-      val agg = stream
+      val s = Replay.sized(s0, "4")
+      val agg = Replay.events(s, d)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
           sum(when(col("value") > 400, 1L).otherwise(0L)).as("f_range"),
           sum(when(col("value") <= 0, 1L).otherwise(0L)).as("f_nonpos"))
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val name = s"graft_stream_expect_$run"
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/expect-$run"
-      try {
-        val q = agg.writeStream
-          .outputMode("complete").format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(ckpt))
-      }
-      drainSink(s, name).orderBy("event_type")
+      Replay.drain(agg, "complete").orderBy("event_type")
     }),
 
     // --- streamed media-header sniffing (round 14): q_image_dims'
@@ -709,22 +429,10 @@ object StreamingSmoke extends QueryModule {
           (id, payload.length.toLong, fmt, w, h)
         })
         .toDF("doc_id", "n_bytes", "fmt", "width", "height")
-      val run = java.util.UUID.randomUUID().toString.take(8)
-      val name = s"graft_stream_img_$run"
-      val ckpt = s"${graft.Scratch.root}/graft_ckpt/img-$run"
-      try {
-        val q = parsed.writeStream
-          .outputMode("append").format("memory").queryName(name)
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally {
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(ckpt))
-      }
-      drainSink(s, name).orderBy("doc_id")
+      Replay.drain(parsed, "append").orderBy("doc_id")
     })
   )
+
 
   // Every one of these replays the full batch input exactly once into
   // deterministic aggregates, so all three carry real oracles: the

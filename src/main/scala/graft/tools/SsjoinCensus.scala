@@ -14,6 +14,8 @@ object SsjoinCensus {
   def main(args: Array[String]): Unit = {
     val sfDir = graft.Session.sfDir
     val spark = graft.Session.local()
+    // without it the first phase also pays the session's start-up
+    graft.Session.warm(spark, sfDir)
     def timed(body: => Long): (Long, Double) = {
       val t0 = System.nanoTime()
       val n = body

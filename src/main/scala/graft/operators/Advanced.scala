@@ -138,7 +138,10 @@ object Advanced extends QueryModule {
           // files under the OTHER dir's still-registered catalog table)
           graft.Scratch.pruneLocked(
             new java.io.File(path).getParentFile, s"${name}_b_", tbl, 3)
-          table(s, d, name).write
+          // one task per bucket: repartition's partition id,
+          // pmod(murmur3(key), 8), is the bucket id, so each task sorts
+          // and writes exactly one bucket file
+          table(s, d, name).repartition(8, col(key)).write
             .bucketBy(8, key).sortBy(key)
             .option("path", path)
             .mode("overwrite").saveAsTable(tbl)

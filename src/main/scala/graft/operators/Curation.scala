@@ -7,7 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.NGramGenerator
+import graft.functions.{AlnumSquash, NGramGenerator}
 
 /** Corpus-curation operators for LLM training-data pipelines, round 3:
   * text normalization, PII redaction, URL extraction, Gopher-style
@@ -49,8 +49,7 @@ object Curation extends QueryModule {
     "q_text_normalize" -> ((s, d) => {
       val raw = concat(lit("  "), upper(col("text")), lit("  !! ["),
         col("doc_id").cast("string"), lit("] ??  "))
-      val norm = trim(regexp_replace(
-        regexp_replace(lower(raw), "[^a-z0-9 ]", ""), " +", " "))
+      val norm = trim(AlnumSquash(lower(raw)))
       table(s, d, "documents")
         .select(col("doc_id"), norm.as("norm"),
           length(norm).cast("long").as("n_chars_norm"))

@@ -7,6 +7,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.AlnumSquash
+
 /** Text-analysis operators for LLM training-data pipelines over the
   * `documents` table: exact dedup, n-gram Jaccard near-dup pairs, token
   * counting (whitespace + BPE-ish regex), quality scoring, heuristic
@@ -650,14 +652,13 @@ object TextPipeline extends QueryModule {
     // readout is the marginal value of normalization itself. Both
     // stages are one digest-keyed shuffle at exact-dedup cost — no
     // pair relation; the census rows are scalar rollups of the two
-    // group-size relations. ---
+    // group-size relations. Nothing is cached: column pruning leaves
+    // each census branch computing only its own digest. ---
     "q_dedup_normalized" -> ((s, d) => {
-      val norm = regexp_replace(regexp_replace(lower(col("text")),
-        "[^a-z0-9 ]", ""), " +", " ")
+      val norm = AlnumSquash(lower(col("text")))
       val docs = table(s, d, "documents")
         .select(col("doc_id"), md5(col("text")).as("efp"),
           md5(norm).as("nfp"))
-        .localCheckpoint()
       def census(key: String, stage: String) = docs
         .groupBy(col(key)).agg(count(lit(1)).as("sz"))
         .agg(count(lit(1)).as("n_groups"),

@@ -46,6 +46,62 @@ class FunctionsPropertySpec extends SparkSuite {
     assert(rows.nonEmpty && rows.forall(r => r.getLong(0) == r.getLong(1)))
   }
 
+  test("AlnumSquash(lower(x)) equals the two-regex chain, generated " +
+      "and interpreted") {
+    import spark.implicits._
+    // characters the chain keeps, drops, case-maps or decodes: ASCII
+    // classes, whitespace runs, Latin-1, KELVIN SIGN (lowers to `k`),
+    // dotted capital I (lowers to `i` plus a combining dot), and an
+    // emoji surrogate pair
+    val piece = Gen.frequency(
+      8 -> Gen.alphaLowerChar.map(_.toString),
+      4 -> Gen.alphaUpperChar.map(_.toString),
+      3 -> Gen.numChar.map(_.toString),
+      6 -> Gen.oneOf(" ", "  ", "   "),
+      4 -> Gen.oneOf("\t", "\n", "\r\n", "_", "-", ".", ",", "!", "'",
+        "[", "]", "@", "~", "\u007f"),
+      3 -> Gen.oneOf("\u00e9", "\u00c9", "\u00df", "\u212a",
+        "\u0130", "\ud83d\ude00"))
+    val texts = sample(
+      Gen.chooseNum(0, 24).flatMap(n => Gen.listOfN(n, piece)).map(_.mkString),
+      300) ++ Seq("", " ", "   ", " a ", "  Lead and trail  ",
+      "A - B", "\u212a\u0130", "x\ud83d\ude00 \ud83d\ude00 y")
+    val dir = tmpDir("alnum_squash")
+    try {
+      // read back from Parquet: a local relation would be folded by
+      // the optimizer, and neither execution path would run
+      (texts.map(Option(_)) :+ None).toDF("t")
+        .unionByName(spark.sql("SELECT CAST(unhex('61FF62') AS STRING) AS t"))
+        .write.parquet(s"$dir/t")
+      for ((mode, wholeStage) <-
+          Seq("CODEGEN_ONLY" -> true, "NO_CODEGEN" -> false)) {
+        spark.conf.set("spark.sql.codegen.factoryMode", mode)
+        spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+        try {
+          val df = spark.read.parquet(s"$dir/t").select(col("t"),
+            functions.AlnumSquash(lower(col("t"))).as("native"),
+            regexp_replace(regexp_replace(lower(col("t")),
+              "[^a-z0-9 ]", ""), " +", " ").as("regex"))
+          val rows = df.collect()
+          assert(rows.length == texts.length + 2)
+          // the invalid byte decodes to U+FFFD on collect
+          assert(rows.exists(r => r.getString(0) == "a\ufffdb" &&
+            r.getString(1) == "ab"), "invalid UTF-8")
+          val bad = rows.filter(r => r.get(1) != r.get(2))
+            .map(r => s"[${r.get(0)}] -> [${r.get(1)}] vs [${r.get(2)}]")
+          val nBad = bad.length
+          assert(nBad == 0, s"$mode: ${bad.take(3).mkString("; ")}")
+          assert(df.queryExecution.executedPlan.exists(_.isInstanceOf[
+            org.apache.spark.sql.execution.WholeStageCodegenExec]) ==
+            wholeStage, mode)
+        } finally {
+          spark.conf.unset("spark.sql.codegen.factoryMode")
+          spark.conf.unset("spark.sql.codegen.wholeStage")
+        }
+      }
+    } finally cleanup(dir)
+  }
+
   test("SimHash64: identical docs hash equal; one-token edit flips few bits") {
     import spark.implicits._
     val docs = sample(doc.filter(_.length >= 10), 12)

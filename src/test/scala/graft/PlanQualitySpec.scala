@@ -123,6 +123,14 @@ class PlanQualitySpec extends SparkSuite {
     assert(!pa.contains("Exchange hashpartitioning"),
       "bucketed agg shuffled despite bucketing:\n" + pa.take(2000))
     assert(pa.contains("Bucketed: true"), pa.take(2000))
+    // each bucketed copy holds exactly one data file per bucket id
+    for ((name, key) <- Seq("lineitem" -> "l_orderkey", "orders" -> "o_orderkey")) {
+      val files = spark.table(operators.Advanced.bucketize(spark, sf, name, key))
+        .inputFiles.toSeq
+      val ids = files.map(f => org.apache.spark.sql.execution.datasources
+        .BucketingUtils.getBucketId(new org.apache.hadoop.fs.Path(f).getName))
+      assert(ids.sorted == (0 until 8).map(Some(_)), files.mkString("\n"))
+    }
   }
 
   test("native top-k plans the custom operator, no window sort") {

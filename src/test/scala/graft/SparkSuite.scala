@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -23,6 +27,23 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   override protected def beforeAll(): Unit = {
     super.beforeAll()
     spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
+  }
+
+  /** Spark jobs started while `body` runs; the listener bus is drained
+    * before and after, so the count is exact.
+    */
+  protected def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    ListenerBusDrain.drain(sc)
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try { body; ListenerBusDrain.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    jobs.get
   }
 
   protected def tmpDir(tag: String): String =

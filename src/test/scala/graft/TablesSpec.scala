@@ -1,31 +1,13 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** `Tables.table` infers each source table's schema once per session and
   * table version, and still returns a fresh relation on every call.
   */
 class TablesSpec extends SparkSuite {
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    ListenerBusDrain.drain(sc)
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try { body; ListenerBusDrain.drain(sc) }
-    finally sc.removeSparkListener(listener)
-    jobs.get
-  }
 
   test("a second table() of one table launches no Spark job") {
     for (name <- Seq("supplier", "events")) {

@@ -217,24 +217,6 @@ class XmlConversionSpec extends SparkSuite {
       "failed source must never be deleted")
   }
 
-  /** Spark jobs started while `body` runs; the listener bus is drained
-    * before and after, so the count is exact.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.ListenerBusDrain.drain(sc)
-    sc.addSparkListener(listener)
-    try { body; org.apache.spark.ListenerBusDrain.drain(sc) }
-    finally sc.removeSparkListener(listener)
-    jobs.get()
-  }
-
   private def bookOrder = XmlQueries.resourceText("bookOrder.xml")
 
   private def writeGz(p: java.nio.file.Path, text: String): Unit = {
@@ -270,7 +252,7 @@ class XmlConversionSpec extends SparkSuite {
       val target = java.nio.file.Files.createTempDirectory("batch_out")
       var failed = Seq.empty[String]
       var written = Seq.empty[String]
-      val n = jobsOf {
+      val n = jobsDuring {
         written = XmlToParquetJob.convert(spark, XmlQueries.xsd,
           Seq(s"$src/*"), target.toString, onError = (f, _) => failed :+= f)
       }
@@ -289,7 +271,7 @@ class XmlConversionSpec extends SparkSuite {
 
   test("archive convert runs one write job regardless of member count") {
     val target = java.nio.file.Files.createTempDirectory("arch_one").toString
-    val jobs = jobsOf {
+    val jobs = jobsDuring {
       XmlToParquetJob.convert(spark, XmlQueries.xsd,
         Seq(XmlQueries.fixtureDir.resolve("books.zip").toString), target)
     }
@@ -465,7 +447,7 @@ class XmlConversionSpec extends SparkSuite {
       java.nio.file.Files.writeString(srcDir.resolve(n), bookOrder)
       srcDir.resolve(n).toString
     }
-    def cli(inputs: Seq[String]): Int = jobsOf {
+    def cli(inputs: Seq[String]): Int = jobsDuring {
       Main.main(Array("-x", xsdFile.toString) ++ inputs)
     }
     val jobsTwo = cli(ins)

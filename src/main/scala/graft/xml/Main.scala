@@ -86,7 +86,10 @@ object Main {
       System.err.println(msg)
       sys.exit(1)
     }
+    // fork-free local writes (graft.io.NioLocalFileSystem): spark-submit
+    // does not pass build.sbt's JVM options
     val builder = SparkSession.builder().appName("xml-to-parquet")
+      .config(graft.io.NioLocalFileSystem.SparkConfs)
     if (!sys.props.contains("spark.master") &&
         !sys.env.contains("SPARK_MASTER"))
       builder.master(s"local[${args.multi}]")
@@ -120,8 +123,9 @@ object Main {
         // schemeless paths keep the local-parity check.
         if (Option(p.toUri.getScheme).exists(_ != "file")) None
         else {
-          val fs =
-            p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+          // the session's file system class: Hadoop caches the first
+          // `file:` file system made in this JVM for the session too
+          val fs = p.getFileSystem(graft.io.NioLocalFileSystem.hadoopConf())
           if (!fs.exists(p))
             Some(s"error: target path '$t' does not exist")
           else if (!fs.getFileStatus(p).isDirectory)

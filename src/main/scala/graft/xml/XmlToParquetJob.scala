@@ -129,6 +129,11 @@ object XmlToParquetJob {
     val parsed = spark.read.format("xml")
       .option("rowTag", root)
       .options(ParseOptions)
+      // Spark's default, pinned: each file is read whole by one task, so
+      // [[convert]] writes each output from one task, as one data file,
+      // without a shuffle (line-split reads can spread a file's rows
+      // over several tasks)
+      .option("multiLine", "true")
       .schema(contentType)
       .load(paths: _*)
     val fileInfo =
@@ -183,17 +188,18 @@ object XmlToParquetJob {
     * paths in worklist order.
     *
     * Job shape: the plain/gzip inputs are ONE batch — one read routed by
-    * source file, `repartition` on the route so each input lands in one
-    * task, one `partitionBy` write into a staging directory under
-    * `targetDir` — and the archives are another, routed by archive and
-    * member. After both writes, one pass in worklist order renames each
-    * partition directory to its reference name (a metadata-only driver
-    * op), so a call costs the same few Spark jobs for one input or ten
-    * thousand, and every output holds exactly one data file. When two
-    * inputs map to the same output name the later one in worklist order
-    * wins, plain or archive. An input that parses to no documents (an
-    * empty file, no root element) still gets a zero-row output with the
-    * fixed schema, copied from one empty write.
+    * source file and one `partitionBy` write into a staging directory
+    * under `targetDir`, one Spark job — and the archives are another,
+    * routed by archive and member. Each file is read whole by one task,
+    * whatever the `rowTag`, so every output's rows already come from one
+    * task and no shuffle precedes the writes. After both writes, one pass
+    * in worklist order renames each partition directory to its reference
+    * name (a metadata-only driver op), so a call costs the same two Spark
+    * jobs for one input or ten thousand, and every output holds exactly
+    * one data file. When two inputs map to the same output name the later
+    * one in worklist order wins, plain or archive. An input that parses
+    * to no documents (an empty file, no root element) still gets a
+    * zero-row output with the fixed schema, copied from one empty write.
     *
     * Per-file failure isolation mirrors the reference's error_callback
     * (convert_xml_to_parquet.py:510-524, :537-539): when a batch write
@@ -305,10 +311,9 @@ object XmlToParquetJob {
       fs.listStatus(dir).toSeq.map(_.getPath)
         .filter(_.getName.startsWith(s"$key="))
     try {
-      // one write: repartition on the route so each input (each member)
-      // lands in one task and so as one data file
-      shaped.repartition(keys.map(col): _*)
-        .write.partitionBy(keys: _*).parquet(staging.toString)
+      // one write, no shuffle: every input (every member) is read by one
+      // task (see `readFiles`), so it lands in one data file
+      shaped.write.partitionBy(keys: _*).parquet(staging.toString)
       val routed = partitions(staging, Route)
         .map(dir => value(dir, Route).toInt -> dir).toMap
       // a partition no input claims would be dropped with the staging

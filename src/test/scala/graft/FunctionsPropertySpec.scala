@@ -16,15 +16,27 @@ class FunctionsPropertySpec extends SparkSuite {
 
   private val seed = rng.Seed(20260812L)
 
+  /** `n` draws of `g`, one seed threaded through all of them. */
   private def sample[A](g: Gen[A], n: Int): Seq[A] =
-    Iterator.iterate((g.pureApply(Gen.Parameters.default, seed), seed.next)) {
-      case (_, s) => (g.pureApply(Gen.Parameters.default, s), s.next)
-    }.map(_._1).take(n).toSeq
+    Gen.listOfN(n, g).pureApply(Gen.Parameters.default, seed)
 
   private val word: Gen[String] =
     Gen.chooseNum(1, 8).flatMap(n => Gen.stringOfN(n, Gen.alphaLowerChar))
   private val doc: Gen[Seq[String]] =
     Gen.chooseNum(0, 40).flatMap(n => Gen.listOfN(n, word))
+
+  test("samples are independent draws, not shifted windows of one " +
+      "string") {
+    val texts = sample(Gen.chooseNum(16, 24)
+      .flatMap(n => Gen.stringOfN(n, Gen.alphaLowerChar)), 20)
+    assert(texts.distinct.size == texts.size)
+    // two independent 16+ letter strings share an 8-letter run with
+    // probability below 1e-8
+    val shifted = texts.zip(texts.tail).filter { case (a, b) =>
+      a.sliding(8).exists(b.contains(_))
+    }
+    assert(shifted.isEmpty, shifted.take(2).mkString("; "))
+  }
 
   test("md5_long64 equals the independent conv(md5) SQL spelling") {
     // the oracle-portable hash base (round 11): first 8 md5 bytes,

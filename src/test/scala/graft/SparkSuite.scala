@@ -2,6 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -44,6 +46,22 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     try { body; ListenerBusDrain.drain(sc) }
     finally sc.removeSparkListener(listener)
     jobs.get
+  }
+
+  /** Command lines of the processes this JVM started while `body` ran,
+    * from a JFR recording of `jdk.ProcessStart`.
+    */
+  protected def processStartsDuring(body: => Unit): Seq[String] = {
+    val rec = new jdk.jfr.Recording()
+    val file = java.nio.file.Files.createTempFile("process_starts", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      try body finally rec.stop()
+      rec.dump(file)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala.toSeq
+        .map(_.getString("command"))
+    } finally { rec.close(); java.nio.file.Files.delete(file) }
   }
 
   protected def tmpDir(tag: String): String =

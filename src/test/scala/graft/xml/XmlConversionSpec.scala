@@ -267,6 +267,62 @@ class XmlConversionSpec extends SparkSuite {
     // the write jobs are per batch (plain/gzip, archives), not per input
     // or member — renames are driver-side metadata ops
     assert(large == small, s"1+1 inputs ran $small jobs, 6+2 ran $large")
+    // one write job per batch, and no shuffle job before it
+    assert(small == 2, s"plain + archives ran $small jobs")
+  }
+
+  test("convert starts no process") {
+    val src = corpus(plain = 3, gz = 3, archives = 2)
+    val target = java.nio.file.Files.createTempDirectory("noproc_out")
+    var written = Seq.empty[String]
+    val started = processStartsDuring {
+      written = XmlToParquetJob.convert(spark, XmlQueries.xsd,
+        Seq(s"$src/*"), target.toString)
+    }
+    assert(written.size == 10, s"wrote $written")
+    assert(started.isEmpty, s"${started.size} processes: ${started.take(3)}")
+  }
+
+  test("a caller's rowTag over a plain file larger than a split still " +
+      "writes one data file") {
+    // `book` is a global element here, so it can be the row tag
+    val xsd =
+      """<?xml version="1.0" encoding="UTF-8"?>
+        |<xs:schema xmlns:xs="http://www.w3.org/2001/XMLSchema">
+        |  <xs:element name="catalog">
+        |    <xs:complexType><xs:sequence>
+        |      <xs:element ref="book" maxOccurs="unbounded"/>
+        |    </xs:sequence></xs:complexType>
+        |  </xs:element>
+        |  <xs:element name="book">
+        |    <xs:complexType>
+        |      <xs:sequence><xs:element name="title" type="xs:string"/></xs:sequence>
+        |      <xs:attribute name="isbn" type="xs:string"/>
+        |    </xs:complexType>
+        |  </xs:element>
+        |</xs:schema>""".stripMargin
+    val books = 2000
+    val src = java.nio.file.Files.createTempDirectory("rowtag_src")
+    val file = src.resolve("catalog.xml")
+    java.nio.file.Files.writeString(file, (0 until books)
+      .map(i => s"""  <book isbn="$i"><title>Title number $i</title></book>""")
+      .mkString("<catalog>\n", "\n", "\n</catalog>\n"))
+    val target = java.nio.file.Files.createTempDirectory("rowtag_out")
+    // about 100 KB of XML in 16 KB splits
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "16k")
+    try {
+      // the file is read whole by one task, whatever the split size
+      val tasks = XmlToParquetJob.read(spark, xsd, Seq(file.toString),
+        rowTag = Some("book")).rdd.getNumPartitions
+      assert(tasks == 1, s"read by $tasks tasks")
+      val written = XmlToParquetJob.convert(spark, xsd, Seq(file.toString),
+        target.toString, rowTag = Some("book"))
+      assert(written == Seq(s"$target/catalog.xml.parquet"), s"$written")
+      assert(dataFiles(written.head).size == 1, dataFiles(written.head))
+      val back = spark.read.parquet(written.head)
+      assert(back.count() == books)
+      assert(back.select("book.`book@isbn`").distinct().count() == books)
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
   }
 
   test("archive convert runs one write job regardless of member count") {
@@ -275,9 +331,9 @@ class XmlConversionSpec extends SparkSuite {
       XmlToParquetJob.convert(spark, XmlQueries.xsd,
         Seq(XmlQueries.fixtureDir.resolve("books.zip").toString), target)
     }
-    // one partitionBy write job (+ at most one shuffle-stage job), NOT a
-    // job per member — the renames are driver-side metadata ops
-    assert(jobs <= 2, s"expected a single write job, saw $jobs")
+    // one partitionBy write job, no shuffle before it, NOT a job per
+    // member — the renames are driver-side metadata ops
+    assert(jobs == 1, s"expected a single write job, saw $jobs")
   }
 
   test("an input with no documents still gets a zero-row output") {

@@ -1,5 +1,16 @@
 package graft
+
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The bench: every registered query, or the `SPARK_GRAFT_ONLY` subset,
+  * timed through [[Measure]] in `SPARK_GRAFT_PASSES` whole-suite passes
+  * (default 2), then the outliers again. A query's time is its best
+  * sample; a query with none is reported in `failed`, never as a timing.
+  * The full-precision record, every sample included, goes where
+  * [[Measure.recordPath]] says (`BENCH_DETAIL.json` for a full run).
+  */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = Session.sfDir
@@ -10,159 +21,54 @@ object Bench {
     // measure the amortized steady state (bucketed tables written once and
     // queried forever), not one-time set-up.
     Session.warm(spark, sfDir)
-    // Deterministic order + per-query stderr progress so a harness timeout
-    // still leaves a legible trail of which query stalled.
-    // Optional subset for local iteration: SPARK_GRAFT_ONLY=q_a,q_b
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    // The host VM suffers intermittent multi-second stall storms (steal
-    // spikes) that can inflate one query 5-30x while its neighbors run
-    // clean. Per-query time is therefore the MIN over two whole-suite
-    // passes — passes are minutes apart, so a burst rarely taxes the
-    // same query twice, and min-of-N is the standard estimator for the
-    // true cost under asymmetric noise (it can only over-state).
-    val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
-    // A sample is Some(seconds) on success, None on failure — a query
-    // that crashes must never contribute its (fast) wall time to the
-    // min, or a crash would read as a speedup.
-    // Every successful sample (passes AND outlier retries), in
-    // chronological order per query — lands in BENCH_DETAIL so a
-    // round-over-round verdict can see that a slow `queries` value was
-    // one storm-taxed pass next to a quiet one, instead of re-running
-    // the adjudication. `queries` itself stays the MIN.
-    val sampleLog =
-      scala.collection.mutable.Map.empty[String, Vector[(Double, Double)]]
-    // 1-minute /proc/loadavg at sample time (round 14, r13 ask #6):
-    // stamping the host load into each pass makes driver-window
-    // contention adjudicable FROM THE ARTIFACT — a slow pass next to
-    // load 30 is a storm reading, next to load 5 it is a real
-    // regression; past verdicts had to cross-reference commit-time
-    // numbers to tell these apart.
-    def loadavg(): Double =
-      try java.nio.file.Files.readString(
-        java.nio.file.Paths.get("/proc/loadavg")).split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
-    def sample(tag: String, name: String,
-        fn: (SparkSession, String) => DataFrame): Option[Double] = {
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] FAILED $tag $name: $e"); false
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val ld = loadavg()
-      System.err.println(f"[bench] $tag%-7s $name%-24s $dt%8.2fs  load=$ld%.1f")
-      if (ok) {
-        sampleLog(name) = sampleLog.getOrElse(name, Vector.empty) :+
-          ((dt, ld))
-        Some(dt)
-      } else None
-    }
-    val timed = (1 to passes).map { p =>
-      selected.map { case (name, fn) =>
-        name -> sample(s"pass$p", name, fn)
-      }.toMap
-    }
-    val best = selected.map { case (name, _) =>
-      name -> timed.flatMap(_.apply(name)).minOption
-    }
-    // Min-of-passes fails when one stall storm spans the whole run (both
-    // passes of the same query land inside it — observed: a quiet-1s
-    // query recorded at 42s with passes=2). Second line of defense:
-    // re-measure the worst outliers solo, where an outlier is a best
-    // time implausibly far above the suite median. Bounded to the top 6
-    // so the retry loop cannot blow the harness wall-clock budget. A
-    // query with no successful sample retries once and is otherwise
-    // reported in `failed`, never as a timing.
-    val med = best.flatMap(_._2).sorted match {
-      case ok if ok.nonEmpty => ok(ok.size / 2)
-      case _                 => 1.0
-    }
-    val cut = math.max(2.5, 6 * med)
-    val byName = selected.toMap
-    val results = best.sortBy { case (_, t) => -t.getOrElse(Double.MaxValue) }
-      .zipWithIndex.map {
-        case ((name, t0), idx) if idx < 6 && t0.forall(_ > cut) =>
-          val re = (1 to 2).flatMap(r => sample(s"retry$r", name, byName(name)))
-          name -> (t0.toSeq ++ re).minOption
-        case ((name, t), _) => name -> t
-      }.sortBy(_._1)
-    val ok = results.collect { case (n, Some(t)) => n -> t }
-    val failed = results.collect { case (n, None) => n }
-    val total = ok.map(_._2).sum
-    def jnum(v: Double, dec: Int): String = s"%.${dec}f".format(v)
-    // Full-precision per-query record for the judge (stdout is size-
-    // capped below; this file is not).
-    val detail = ok.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val samplesJson = ok.map { case (k, _) =>
-      "\"" + k + "\":" +
-        sampleLog.getOrElse(k, Vector.empty)
-          .map { case (t, ld) => s"""{"t":$t,"load":$ld}""" }
-          .mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // A SPARK_GRAFT_ONLY subset run is a local iteration tool — never
-    // let it clobber the committed full-suite record BENCH_DETAIL.json
-    // holds; SPARK_GRAFT_DETAIL_OUT redirects a subset's full-precision
-    // record to its own file (the panel runner uses this — same
-    // redirect discipline as ScaleProbe's SPARK_GRAFT_OUT).
-    val detailPath =
-      if (only.isEmpty) Some("/root/repo/BENCH_DETAIL.json")
-      else sys.env.get("SPARK_GRAFT_DETAIL_OUT")
-    val sha = GitSha.resolve()
-    try detailPath.foreach { p =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        (s"""{"metric":"total","value":$total,"unit":"sec",""" +
-          s""""queries":$detail,"samples":$samplesJson,""" +
-          s""""failed":$failedJson,""" +
-          s""""sf":"$sfDir","passes":$passes,"git_sha":"$sha"}""" +
-          "\n").getBytes("UTF-8"))
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write ${detailPath.orNull}: $e")
-    }
-    // The harness records only the LAST ~2000 BYTES of stdout and parses
-    // the JSON line out of that tail — a longer line gets truncated from
-    // the front and the round's bench goes ungraded (this happened in
-    // rounds 1-4). Keep the line comfortably under the cap: 2-decimal
-    // values, and if the full per-query map still doesn't fit, name the
-    // slowest queries individually (the perf-relevant ones) and fold the
-    // fast remainder into `_other` (count in `_other_n`); full precision
-    // for everything is always in BENCH_DETAIL.json.
-    val budget = 1700
-    def mkLine(entries: Seq[(String, String)]): String = {
-      val qs = entries.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${jnum(total, 2)},"unit":"sec",""" +
-        s""""queries":$qs,"failed":$failedJson,"sf":"$sfDir",""" +
-        s""""passes":$passes,"git_sha":"$sha",""" +
-        s""""detail":"BENCH_DETAIL.json"}"""
-    }
-    val all = ok.map { case (k, v) => k -> jnum(v, 2) }
-    val line = {
-      val full = mkLine(all)
-      if (full.length <= budget) full
-      else {
-        val bySlow = ok.sortBy(-_._2)
-        // largest k such that the line with k named + _other fits
-        val k = (bySlow.size to 1 by -1).find { n =>
-          val kept = bySlow.take(n).map { case (q, v) => q -> jnum(v, 2) }
-          val rest = bySlow.drop(n)
-          val entries = kept ++ Seq(
-            "_other" -> jnum(rest.map(_._2).sum, 2),
-            "_other_n" -> rest.size.toString)
-          mkLine(entries.sortBy(_._1)).length <= budget
-        }.getOrElse(1)
-        val kept = bySlow.take(k).map { case (q, v) => q -> jnum(v, 2) }
-        val rest = bySlow.drop(k)
-        mkLine((kept ++ Seq(
-          "_other" -> jnum(rest.map(_._2).sum, 2),
-          "_other_n" -> rest.size.toString)).sortBy(_._1))
-      }
-    }
-    println(line)
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => Session.selected(n) }
+    println(run(spark, sfDir, queries,
+      sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt,
+      Measure.recordPath("BENCH_DETAIL.json")))
     spark.stop()
+  }
+
+  /** Times `queries` on `sfDir`, writes the full-precision record to `out`
+    * and returns the one-line summary the bench prints.
+    */
+  def run(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      passes: Int, out: Option[String]): String = {
+    val thunks = queries.map { case (n, fn) => n -> (() => fn(spark, sfDir)) }
+    val samples = Measure.retryOutliers(thunks, Measure.sweep(thunks, passes))
+    val best = thunks.map { case (n, _) => n -> Measure.best(samples(n)) }
+    val ok = best.collect { case (n, Some(s)) => n -> s.total }
+    val failed = best.collect { case (n, None) => n }
+    val total = ok.map(_._2).sum
+    val sha = GitSha.resolve()
+    try out.foreach(Measure.writeJson(_, ListMap("metric" -> "total",
+      "value" -> total, "unit" -> "sec", "queries" -> ListMap(ok: _*),
+      "samples" -> ListMap(ok.map { case (n, _) => n -> samples(n) }: _*),
+      "failed" -> failed, "sf" -> sfDir, "passes" -> passes, "git_sha" -> sha)))
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] could not write ${out.orNull}: $e")
+    }
+    // The harness keeps only the last ~2000 bytes of stdout and parses the
+    // JSON line out of that tail; a longer line loses its front and the
+    // bench goes ungraded. So the line carries 2-decimal values, and when
+    // it is still too long it names the slowest queries and folds the
+    // rest into `_other` (their count in `_other_n`).
+    import Measure.round
+    val bySlow = ok.sortBy(-_._2)
+    def line(named: Int): String = {
+      val (kept, rest) = bySlow.splitAt(named)
+      val other = if (rest.isEmpty) Nil
+        else Seq("_other" -> round(rest.map(_._2).sum),
+          "_other_n" -> rest.size)
+      Measure.mapper.writeValueAsString(ListMap("metric" -> "total",
+        "value" -> round(total), "unit" -> "sec",
+        "queries" -> ListMap(kept.sortBy(_._1).map { case (n, t) =>
+          n -> round(t) } ++ other: _*),
+        "failed" -> failed, "sf" -> sfDir, "passes" -> passes,
+        "git_sha" -> sha, "detail" -> out))
+    }
+    (ok.size to 1 by -1).iterator.map(line).find(_.length <= 1700)
+      .getOrElse(line(1))
   }
 }

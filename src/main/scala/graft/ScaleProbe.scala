@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,10 +49,11 @@ import org.apache.spark.sql.functions._
   * of keys own ~28% of rows (see [[buildSkewed]]); the uniform levels'
   * disjoint-key replication can never exercise that axis.
   * Runtime knobs: SPARK_GRAFT_COPIES (default "10,30,60" — comma list;
-  * the first level probes all 17 queries, deeper levels the steep
+  * the first level probes the whole pool, deeper levels the steep
   * tail, >= 60x only the graph tail), SPARK_GRAFT_SKEW=off to skip the
-  * skew level, SPARK_GRAFT_CPUS, SPARK_GRAFT_ONLY (subset),
-  * SPARK_GRAFT_PASSES (default 2).
+  * skew levels, SPARK_GRAFT_SCALE_DIR (root of the built datasets),
+  * SPARK_GRAFT_CPUS, SPARK_GRAFT_ONLY (subset), SPARK_GRAFT_PASSES
+  * (default 2) and SPARK_GRAFT_OUT ([[Measure.recordPath]]).
   */
 object ScaleProbe {
 
@@ -155,6 +158,22 @@ object ScaleProbe {
   private def maxOf(df: DataFrame, c: String): Long =
     df.agg(max(col(c))).head().getLong(0)
 
+  /** Writes `events` as the single FILE `dst/events.parquet`, not a Spark
+    * directory: the streaming replay builders read the dataset dir with
+    * pathGlobFilter=events.parquet, which matches nothing inside a
+    * directory-shaped table (observed: an empty replay and a MatchError
+    * on the min/max row).
+    */
+  private def writeEvents(events: DataFrame, dst: String): Unit = {
+    val stage = new java.io.File(dst, ".stage_events")
+    events.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+    val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
+    val destF = new java.io.File(dst, "events.parquet")
+    org.apache.commons.io.FileUtils.deleteQuietly(destF)
+    java.nio.file.Files.move(part.toPath, destF.toPath)
+    org.apache.commons.io.FileUtils.deleteDirectory(stage)
+  }
+
   /** Key-shifted replication of every base table into `dst`. V2
     * (round 16): `events` is written as a single FILE, not a Spark
     * directory — the streaming replay builders read the dataset dir
@@ -201,21 +220,11 @@ object ScaleProbe {
       .withColumn("l_orderkey", shift("l_orderkey", oOff, i))
       .withColumn("l_partkey", shift("l_partkey", pOff, i))
       .withColumn("l_suppkey", shift("l_suppkey", sOff, i)))
-    locally {
-      val src = read("events")
-      val out = (0 until copies).map(i => src
-        .withColumn("event_id", shift("event_id", eOff, i))
-        .withColumn("user_id", shift("user_id", uOff, i)))
-        .reduce(_ unionByName _)
-      val stage = new java.io.File(dst, ".stage_events")
-      out.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-      val destF = new java.io.File(dst, "events.parquet")
-      org.apache.commons.io.FileUtils.deleteQuietly(destF)
-      java.nio.file.Files.move(part.toPath, destF.toPath)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
-      System.err.println(s"[scale] built events x$copies (single file)")
-    }
+    writeEvents((0 until copies).map(i => read("events")
+      .withColumn("event_id", shift("event_id", eOff, i))
+      .withColumn("user_id", shift("user_id", uOff, i)))
+      .reduce(_ unionByName _), dst)
+    System.err.println(s"[scale] built events x$copies (single file)")
     replicate("documents")((d, i) => d
       .withColumn("doc_id", shift("doc_id", dOff, i))
       .withColumn("text", if (i == 0) col("text")
@@ -274,26 +283,13 @@ object ScaleProbe {
       read(t).write.mode("overwrite").parquet(s"$dst/$t.parquet")
     // events: user_id UNSHIFTED across copies (the hot session/state
     // key is the point), event_id shifted so every row stays unique;
-    // timestamps repeat, which only deepens each hot session. Written
-    // as a single FILE, not a Spark directory — the streaming replay
-    // builders read the dir with pathGlobFilter=events.parquet, which
-    // matches nothing inside a directory-shaped table (observed: an
-    // empty replay and a MatchError on the min/max row).
+    // timestamps repeat, which only deepens each hot session.
     val eOff = maxOf(read("events"), "event_id") + 1
-    locally {
-      val stage = new java.io.File(dst, ".stage_events")
-      read("events")
-        .withColumn("cp",
-          explode(sequence(lit(0L), ladder(col("user_id")) - 1)))
-        .withColumn("event_id", col("event_id") + col("cp") * lit(eOff))
-        .drop("cp")
-        .coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-      val destF = new java.io.File(dst, "events.parquet")
-      org.apache.commons.io.FileUtils.deleteQuietly(destF)
-      java.nio.file.Files.move(part.toPath, destF.toPath)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
-    }
+    writeEvents(read("events")
+      .withColumn("cp",
+        explode(sequence(lit(0L), ladder(col("user_id")) - 1)))
+      .withColumn("event_id", col("event_id") + col("cp") * lit(eOff))
+      .drop("cp"), dst)
     System.err.println("[scale] built events skew=zipf")
     val li = read("lineitem")
     val lnType = li.schema("l_linenumber").dataType
@@ -342,8 +338,9 @@ object ScaleProbe {
     val pOff = maxOf(read("part"), "p_partkey") + 1
     val sOff = maxOf(read("supplier"), "s_suppkey") + 1
     for (t <- Seq("region", "nation", "customer", "supplier", "part",
-        "orders", "events", "documents", "embeddings"))
+        "orders", "documents", "embeddings"))
       read(t).write.mode("overwrite").parquet(s"$dst/$t.parquet")
+    writeEvents(read("events"), dst)
     val li = read("lineitem")
     val hub = pmod(xxhash64(col("l_partkey")), lit(1000L)) === 0L
     (0 until copies).map { i =>
@@ -360,334 +357,210 @@ object ScaleProbe {
     java.nio.file.Files.write(done.toPath, Array.emptyByteArray)
   }
 
+  /** The zipf level's probes: the three skew-sensitive pipelines and the
+    * pair-emission and sketch shapes added since. A super-linear reading
+    * means a hot key serialized the plan, unless the data itself carries
+    * more near-dup work (the x180 clique families), adjudicated in
+    * SURVEY §6.
+    */
+  val skewProbes: Seq[String] = Seq(
+    "q_join_salted", "q_dedup_cluster",
+    // the posting-stream BUILD itself, bypassing the truth cache —
+    // the pipeline the df-cap exists to protect
+    "ngram_posting_build",
+    // the prefix-filtered
+    // similarity join against viral tokens (the x1200 family's
+    // shared vocabulary is the df-ordering's stress test), and one
+    // stateful streaming twin against hot state keys (a user
+    // owning ~28% of the stream concentrates one group's state
+    // and iterator on a single task)
+    "q_ssjoin_prefix", "q_streaming_session",
+    // the brief's flagship dedup
+    // — template zipf is LSH's adversary (per-(band,bkey) posting
+    // lists grow with family size; a xk family emits C(k,2)
+    // candidates per colliding band, and every one is genuine
+    // output, so the expected reading is output-bound like the
+    // ssjoin adjudication, not hot-key serialization);
+    "q_dedup_minhash",
+    // the sketch family against hot KEYS (events carries the
+    // user_id ladder): CMS updates and KMV bounded heaps are
+    // commutative map-side merges — both should read ~linear in
+    // volume regardless of key skew, and this pins it (q_agg_hll's
+    // input table, orders, passes through 1x in this build — its
+    // sketch-update shape is the same commutative-merge algebra
+    // the CMS entry measures);
+    "q_agg_cms", "q_kmv_distinct",
+    // and the co-purchase graph derivation against zipf-duplicated
+    // lines: every hot order's lines repeat x1200, so the edge
+    // self-join would square the duplication without the
+    // pre-distinct inside orientedTriangleEdges (which the
+    // l_orderkey bucketing makes exchange-free) — this entry is
+    // that defense's measurement
+    "q_graph_triangle",
+    // two pair-emission shapes:
+    // the RA link predictor's collect_set postings absorb the
+    // zipf line duplication exactly like the triangle pre-distinct
+    // (expected ~volume-bound), while the simhash radius eval's
+    // banded candidates grow C(k,2) per ×k template family —
+    // expected output-bound like q_dedup_minhash, and this entry
+    // is the measurement that says which it is
+    "q_graph_resource_alloc", "q_simhash_eval",
+    // the Salton card shares commonnbrs'
+    // df-capped sorted-posting emission (C(df,2) per part — the
+    // [2,256] cap is the defense; this is its fourth measurement
+    // beside commonnbrs/RA/pref-attach), and the AMS F2 sketch is
+    // the same commutative map-side merge algebra the CMS/KMV
+    // entries pin (8 sign-sums — expected ~flat under hot keys)
+    "q_graph_salton", "q_ams_f2",
+    // the two SPAN pipelines against template zipf —
+    // their adversary: a ×k repeated template multiplies both the
+    // repeated-shingle list (dedup_spans' broadcast-back side) and
+    // the benchmark-gram hit stream (contam_spans' map-side
+    // match), and every extra hit position is genuine output
+    // (islands to cut), so the expected reading is output-bound
+    // like q_dedup_minhash — these entries are that measurement.
+    // The delta probe rides along: its broadcast side is the
+    // delta's band keys, so hot templates inflate candidates but
+    // never serialize a key
+    "q_dedup_spans", "q_contam_spans", "q_minhash_delta")
+
+  /** The hub level's probes: the degree orientation's actual adversary
+    * is the power-law head [[buildSkewedGraph]] produces; the wedge
+    * spelling's cost is sum C(d_out, 2), so the head is its adversary
+    * even more than the broadcast plan's.
+    */
+  val hubProbes: Seq[String] = Seq(
+    "q_graph_triangle", "q_graph_commonnbrs", "q_graph_triangle_wedge")
+
+  /** A probe by name: a registered query, the wedge spelling of the
+    * triangle query, or the posting-stream build.
+    */
+  private def probe(name: String): (SparkSession, String) => DataFrame =
+    name match {
+      // The co-partitioned wedge join is the only plan past the
+      // broadcast-feasibility gate, so it needs its own measured
+      // exponent series next to the broadcast one.
+      case "q_graph_triangle_wedge" => (s, d) =>
+        operators.Retrieval.triangleByWedge(
+          operators.Retrieval.orientedTriangleEdges(s, d))
+      case "ngram_posting_build" => operators.TextPipeline.ngramPairsCompute
+      case q => SparkEntry.queries(q)
+    }
+
+  /** Per-query growth row: raw wall exponent log_c(r_wall) plus the
+    * per-unit-output exponent log_c(r_wall / max(1, r_out/c)), the wall
+    * growth after crediting output growth BEYOND the volume factor as
+    * legitimate work. For fixed-size or volume-linear outputs the two
+    * coincide; only when the answer itself grows super-linearly (pair
+    * relations under skew) do they diverge. Flags read the per-output
+    * one (returned next to the row, unrounded).
+    */
+  private def growthRow(base: Option[Measure.Sample],
+      scaled: Option[Measure.Sample], c: Double): (Map[String, Any], Double) =
+    (base, scaled) match {
+      case (Some(b), Some(s)) =>
+        import Measure.round
+        val ratio = s.total / b.total
+        val outRatio = if (b.rows > 0) s.rows.toDouble / b.rows else 1.0
+        val perOut = math.log(ratio / math.max(1.0, outRatio / c)) / math.log(c)
+        (ListMap("base" -> round(b.total), "scaled" -> round(s.total),
+          "ratio" -> round(ratio),
+          "exponent" -> round(math.log(ratio) / math.log(c)),
+          "base_out" -> b.rows, "scaled_out" -> s.rows,
+          "out_ratio" -> round(outRatio, 1), "exp_per_out" -> round(perOut)),
+          perOut)
+      case _ => (ListMap("failed" -> true), Double.NaN)
+    }
+
+  /** One probe level: each pass runs every probe on `base`, then on `dst`
+    * (so a stall storm taxes both sides of the ratio), the best sample per
+    * side gives one growth row per probe over the volume `factor`, and a
+    * probe is flagged when its per-output exponent is over `threshold`.
+    * The wedge spelling is expected super-linear (its design bound is the
+    * O(m^1.5) wedge volume), so it is flagged only past 1.5.
+    */
+  def probeLevel(spark: SparkSession, base: String, dst: String, factor: Int,
+      threshold: Double, probes: Seq[String], passes: Int): Map[String, Any] = {
+    def side(tag: String, dir: String) =
+      probes.map(q => s"$tag $q" -> (() => probe(q)(spark, dir)))
+    val samples = Measure.sweep(side("base", base) ++ side(s"x$factor", dst),
+      passes)
+    val rows = probes.map(q => q -> growthRow(Measure.best(samples(s"base $q")),
+      Measure.best(samples(s"x$factor $q")), factor.toDouble))
+    ListMap("threshold" -> threshold,
+      "queries" -> ListMap(rows.map { case (q, (row, _)) => q -> row }: _*),
+      "flagged" -> rows.collect { case (q, (_, e))
+        if e > (if (q.endsWith("_wedge")) 1.5 else threshold) => q })
+  }
+
   def main(args: Array[String]): Unit = {
     val base = Session.sfDir
     val dstRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale")
     val levels = sys.env.getOrElse("SPARK_GRAFT_COPIES", "10,30,60")
       .split(",").map(_.trim.toInt).toSeq.sorted
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt
+    val skew = !sys.env.get("SPARK_GRAFT_SKEW").contains("off")
     val spark = Session.local()
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    // Samples carry the OUTPUT ROW COUNT next to the wall time
-    // (round 16, r15 asks #3/#4): a probe whose wall grows because its
-    // answer grows (near-dup families emit C(k,2) genuine pairs under
-    // template skew) is output-bound, not plan-degenerate — recording
-    // the counts in-artifact makes that adjudication automatic instead
-    // of a SURVEY-prose appendix next to a standing flag.
-    def sampleF(tag: String, q: String, f: String => Long,
-        dir: String): Option[(Double, Long)] = {
-      val t0 = System.nanoTime()
-      val n = try Some(f(dir)) catch { case e: Throwable =>
-        System.err.println(s"[scale] FAILED $tag $q: $e"); None }
-      val dt = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[scale] $tag%-10s $q%-24s $dt%8.2fs" +
-        n.map(v => s"  rows=$v").getOrElse(""))
-      n.map(v => (dt, v))
+    // Both sides are warmed as Bench warms: timed passes measure the
+    // amortized steady state on both, where a cold first pass would
+    // charge one dir the one-time build cost and skew the exponent.
+    Session.warm(spark, base)
+    def level(dst: String, factor: Int, threshold: Double,
+        probes: Seq[String]): Map[String, Any] = {
+      Session.warm(spark, dst)
+      probeLevel(spark, base, dst, factor, threshold, probes, passes)
     }
-    def runQ(q: String): String => Long =
-      (dir: String) => SparkEntry.queries(q)(spark, dir).count()
-    /** Per-query growth row: raw wall exponent log_c(r_wall) PLUS the
-      * per-unit-output exponent log_c(r_wall / max(1, r_out/c)) — the
-      * wall growth after crediting output growth BEYOND the volume
-      * factor as legitimate work. For fixed-size or volume-linear
-      * outputs the two coincide; only when the answer itself grows
-      * super-linearly (pair relations under skew) do they diverge, and
-      * the flag reads the per-output one — the self-adjudication the
-      * r14/r15 ssjoin flags needed prose for.
-      */
-    def growthRow(q: String, b: Option[(Double, Long)],
-        sc: Option[(Double, Long)], c: Double): (String, String, Double) =
-      (b, sc) match {
-        case (Some((bt, bn)), Some((st, sn))) =>
-          val ratio = st / bt
-          val expn = math.log(ratio) / math.log(c)
-          val outRatio = if (bn > 0) sn.toDouble / bn else 1.0
-          val perOut = math.log(ratio / math.max(1.0, outRatio / c)) /
-            math.log(c)
-          (q, f"""{"base":$bt%.2f,"scaled":$st%.2f,"ratio":$ratio%.2f,""" +
-            f""""exponent":$expn%.2f,"base_out":$bn,"scaled_out":$sn,""" +
-            f""""out_ratio":$outRatio%.1f,"exp_per_out":$perOut%.2f}""",
-            perOut)
-        case _ => (q, """{"failed":true}""", Double.NaN)
-      }
-    // The wedge-forced spelling of the triangle query (round-14, r13
-    // ask #2): the co-partitioned wedge join is the ONLY plan available
-    // past the broadcast-feasibility gate, so it needs its own measured
-    // exponent series next to the broadcast one — shipping the fallback
-    // unmeasured would repeat the r12 mistake the broadcast probes
-    // fixed. Forced via the in-process property triangleStrategy reads.
-    val wedgeTriangle: String => Long = (dir: String) => {
-      System.setProperty("graft.triangle.force", "wedge")
-      try SparkEntry.queries("q_graph_triangle")(spark, dir).count()
-      finally { System.clearProperty("graft.triangle.force"); () }
-    }
-    def warm(dir: String): Unit =
-      try {
-        operators.Advanced.bucketize(spark, dir, "lineitem", "l_orderkey")
-        operators.Advanced.bucketize(spark, dir, "orders", "o_orderkey")
-        operators.Advanced.bucketize(spark, dir, "events", "user_id")
-        operators.TextPipeline.prewarmTruth(spark, dir)
-      } catch { case e: Throwable =>
-        System.err.println(s"[scale] warmup $dir failed (non-fatal): $e")
-      }
-    // Pre-warm the base dir's one-time materializations (bucketed
-    // layouts, the ngram truth relation) exactly as Bench does, so
-    // timed passes measure the amortized steady state on BOTH sides —
-    // a cold first pass would charge a dir the build cost and skew the
-    // exponent.
-    warm(base)
-    val levelJsons = levels.zipWithIndex.map { case (copies, li) =>
+    // The first level probes the full pool; deeper levels the steep tail,
+    // 60x and beyond only the graph tail. At the first (10x) level the
+    // threshold is 1.3 (super-linear beyond noise); deeper it tightens to
+    // 0.9: the scaled corpus is disjoint shifted components, so honest
+    // distributed plans converge to exponent <= ~0.8 by 30x.
+    val uniform = levels.zipWithIndex.map { case (copies, li) =>
       val dst = s"${dstRoot}_$copies"
       buildScaled(spark, base, dst, copies)
-      warm(dst)
-      // first level probes the full set; deeper levels the steep tail;
-      // 60x and beyond only the graph tail (the one drifting exponent)
-      val pool = if (li == 0) probeQueries
-        else if (copies >= 60) graphTail
-        else tailQueries
-      val selected = pool.filter(q => only.forall(_.contains(q)))
-      val probeFns: Seq[(String, String => Long)] =
-        selected.map(q => q -> runQ(q)) ++
-          (if (selected.contains("q_graph_triangle"))
-            Seq("q_graph_triangle_wedge" -> wedgeTriangle)
-          else Seq.empty)
-      // min over passes (same stall-storm estimator as Bench); each
-      // pass runs base THEN scaled back to back, so a stall storm
-      // taxes both sides of the ratio instead of one. MIN by wall;
-      // the row count rides along (identical across passes anyway —
-      // the queries are deterministic).
-      val passResults = (1 to passes).map { p =>
-        val b = probeFns.map { case (q, f) =>
-          q -> sampleF(s"b$copies/$p", q, f, base) }.toMap
-        val sc = probeFns.map { case (q, f) =>
-          q -> sampleF(s"s$copies/$p", q, f, dst) }.toMap
-        (b, sc)
-      }
-      val names = probeFns.map(_._1)
-      val baseT = names.map(q =>
-        q -> passResults.flatMap(_._1(q)).minByOption(_._1)).toMap
-      val scaledT = names.map(q =>
-        q -> passResults.flatMap(_._2(q)).minByOption(_._1)).toMap
-      val rows = names.map(q =>
-        growthRow(q, baseT(q), scaledT(q), copies.toDouble))
-      val threshold = if (copies >= 30) 0.9 else 1.3
-      // Flags read the PER-OUTPUT exponent (self-adjudicating: output
-      // growth beyond the volume factor is credited as work). The
-      // wedge series' DESIGN bound is the O(m^1.5) wedge volume — it
-      // is expected super-linear (that is why it loses to the
-      // broadcast below the gate); flag it only past its own bound.
-      val flagged = rows.collect { case (q, _, e)
-        if e > (if (q.endsWith("_wedge")) 1.5 else threshold) => q }
-      val json = rows.map { case (q, j, _) => "\"" + q + "\":" + j }
-        .mkString("{", ",", "}")
-      s"""{"copies":$copies,"threshold":$threshold,"queries":$json,""" +
-        s""""flagged":${
-          flagged.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
+      val pool = (if (li == 0) probeQueries else if (copies >= 60) graphTail
+        else tailQueries).filter(Session.selected)
+      val wedge = if (pool.contains("q_graph_triangle"))
+        Seq("q_graph_triangle_wedge") else Nil
+      ListMap("copies" -> copies) ++
+        level(dst, copies, if (copies >= 30) 0.9 else 1.3, pool ++ wedge)
     }
-    // ---- skew level (round 13): same base-vs-scaled estimator, but
-    // the scaled dir is the zipf-skewed 10x build and the probes are
-    // the three skew-sensitive pipelines. The exponent uses c=10 (the
-    // nominal volume factor); a super-linear reading here means a hot
-    // key serialized the plan, UNLESS the data itself carries more
-    // near-dup work (the x180 clique families) — adjudicated in
-    // SURVEY §6.
-    val skewJson = if (sys.env.get("SPARK_GRAFT_SKEW").contains("off"))
-      None
-    else {
+    val zipf = Option.when(skew) {
       val dst = s"${dstRoot}_zipf"
       buildSkewed(spark, base, dst)
-      // the truth relation feeds the cluster probe; the bucketed
-      // lineitem feeds the round-15 triangle probe (one-time layout
-      // cost outside the timed passes, the Bench prewarm discipline)
-      try {
-        operators.TextPipeline.prewarmTruth(spark, dst)
-        operators.Advanced.bucketize(spark, dst, "lineitem", "l_orderkey")
-        ()
-      } catch { case e: Throwable =>
-        System.err.println(s"[scale] skew warmup failed (non-fatal): $e")
-      }
-      val probes: Seq[(String, String => Long)] = Seq(
-        "q_join_salted" -> runQ("q_join_salted"),
-        "q_dedup_cluster" -> runQ("q_dedup_cluster"),
-        // the posting-stream BUILD itself, bypassing the truth cache —
-        // the pipeline the df-cap exists to protect
-        "ngram_posting_build" -> ((dir: String) =>
-          operators.TextPipeline.ngramPairsCompute(spark, dir)
-            .count()),
-        // round-14 extensions (r13 ask #3): the prefix-filtered
-        // similarity join against viral tokens (the x1200 family's
-        // shared vocabulary is the df-ordering's stress test), and one
-        // stateful streaming twin against hot state keys (a user
-        // owning ~28% of the stream concentrates one group's state
-        // and iterator on a single task)
-        "q_ssjoin_prefix" -> runQ("q_ssjoin_prefix"),
-        "q_streaming_session" -> runQ("q_streaming_session"),
-        // round-15 extensions (r14 ask #4): the brief's flagship dedup
-        // — template zipf is LSH's adversary (per-(band,bkey) posting
-        // lists grow with family size; a xk family emits C(k,2)
-        // candidates per colliding band, and every one is genuine
-        // output, so the expected reading is output-bound like the r14
-        // ssjoin adjudication, not hot-key serialization);
-        "q_dedup_minhash" -> runQ("q_dedup_minhash"),
-        // the sketch family against hot KEYS (events carries the
-        // user_id ladder): CMS updates and KMV bounded heaps are
-        // commutative map-side merges — both should read ~linear in
-        // volume regardless of key skew, and this pins it (q_agg_hll's
-        // input table, orders, passes through 1x in this build — its
-        // sketch-update shape is the same commutative-merge algebra
-        // the CMS entry measures);
-        "q_agg_cms" -> runQ("q_agg_cms"),
-        "q_kmv_distinct" -> runQ("q_kmv_distinct"),
-        // and the co-purchase graph derivation against zipf-duplicated
-        // lines: every hot order's lines repeat x1200, so the edge
-        // self-join would square the duplication without the
-        // pre-distinct inside orientedTriangleEdges (which the
-        // l_orderkey bucketing makes exchange-free) — this entry is
-        // that defense's measurement
-        "q_graph_triangle" -> runQ("q_graph_triangle"),
-        // round-15 second-half additions with pair-emission shapes:
-        // the RA link predictor's collect_set postings absorb the
-        // zipf line duplication exactly like the triangle pre-distinct
-        // (expected ~volume-bound), while the simhash radius eval's
-        // banded candidates grow C(k,2) per ×k template family —
-        // expected output-bound like q_dedup_minhash, and this entry
-        // is the measurement that says which it is
-        "q_graph_resource_alloc" -> runQ("q_graph_resource_alloc"),
-        "q_simhash_eval" -> runQ("q_simhash_eval"),
-        // round-16 continuation: the Salton card shares commonnbrs'
-        // df-capped sorted-posting emission (C(df,2) per part — the
-        // [2,256] cap is the defense; this is its fourth measurement
-        // beside commonnbrs/RA/pref-attach), and the AMS F2 sketch is
-        // the same commutative map-side merge algebra the CMS/KMV
-        // entries pin (8 sign-sums — expected ~flat under hot keys)
-        "q_graph_salton" -> runQ("q_graph_salton"),
-        "q_ams_f2" -> runQ("q_ams_f2"),
-        // round 17: the two SPAN pipelines against template zipf —
-        // their adversary: a ×k repeated template multiplies both the
-        // repeated-shingle list (dedup_spans' broadcast-back side) and
-        // the benchmark-gram hit stream (contam_spans' map-side
-        // match), and every extra hit position is genuine output
-        // (islands to cut), so the expected reading is output-bound
-        // like q_dedup_minhash — these entries are that measurement.
-        // The delta probe rides along: its broadcast side is the
-        // delta's band keys, so hot templates inflate candidates but
-        // never serialize a key
-        "q_dedup_spans" -> runQ("q_dedup_spans"),
-        "q_contam_spans" -> runQ("q_contam_spans"),
-        "q_minhash_delta" -> runQ("q_minhash_delta"))
-      val selected = probes.filter { case (q, _) =>
-        only.forall(_.contains(q)) }
-      val passResults = (1 to passes).map { p =>
-        val b = selected.map { case (q, f) =>
-          q -> sampleF(s"bz/$p", q, f, base) }.toMap
-        val sc = selected.map { case (q, f) =>
-          q -> sampleF(s"sz/$p", q, f, dst) }.toMap
-        (b, sc)
-      }
-      val rows = selected.map { case (q, _) =>
-        growthRow(q, passResults.flatMap(_._1(q)).minByOption(_._1),
-          passResults.flatMap(_._2(q)).minByOption(_._1), 10.0)
-      }
-      // per-output flags: a zipf corpus GENUINELY carries C(k,2)
-      // qualifying pairs per xk near-dup family, so the raw wall
-      // exponent over-indicts output-bound pipelines (the r14/r15
-      // ssjoin flag); wall growth is only a defect when it outruns
-      // volume-normalized output growth too
-      val flagged = rows.collect { case (q, _, e) if e > 1.3 => q }
-      // Candidate census for the two banded dedup pipelines (round 16,
-      // r15 asks #3/#4): candidates vs qualifying output on both
-      // sides, in-artifact — a future above-threshold exponent arrives
-      // pre-adjudicated (candidate excess flat = output-bound; excess
-      // growing = the filter/cap regressing). One extra count per
-      // (pipeline, side); skipped under SPARK_GRAFT_ONLY subsets that
-      // exclude the pipeline.
-      def censusRow(q: String, f: String => Long): Option[String] =
-        if (!only.forall(_.contains(q))) None
-        else try {
-          val cb = f(base)
-          val cs = f(dst)
-          Some(s""""$q":{"base_cand":$cb,"scaled_cand":$cs}""")
-        } catch { case e: Throwable =>
-          System.err.println(s"[scale] census $q failed: $e"); None
+      // Candidate census of the two banded dedup pipelines: candidates vs
+      // qualifying output on both sides, so an above-threshold exponent
+      // arrives adjudicated (excess flat = output-bound; excess growing =
+      // the filter or cap regressing).
+      val census = Seq[(String, String => Long)](
+        "q_ssjoin_prefix" -> (d => operators.TextPipeline
+          .ssjoinCandidates(spark, d, positional = true).count()),
+        "q_dedup_minhash" -> (d =>
+          operators.Dedup.minhashCandidates(spark, d).count()))
+        .filter(c => Session.selected(c._1)).flatMap { case (q, cands) =>
+          try Some(q -> ListMap("base_cand" -> cands(base),
+            "scaled_cand" -> cands(dst)))
+          catch { case e: Throwable =>
+            System.err.println(s"[scale] census $q failed: $e"); None
+          }
         }
-      val census = Seq(
-        censusRow("q_ssjoin_prefix", dir =>
-          operators.TextPipeline
-            .ssjoinCandidates(spark, dir, positional = true).count()),
-        censusRow("q_dedup_minhash", dir =>
-          operators.Dedup.minhashCandidates(spark, dir).count())
-      ).flatten
-      Some(s"""{"skew":"zipf","factor":10,"threshold":1.3,""" +
-        s""""queries":${rows.map { case (q, j, _) => "\"" + q + "\":" + j }
-          .mkString("{", ",", "}")},""" +
-        s""""census":${census.mkString("{", ",", "}")},""" +
-        s""""flagged":${
-          flagged.map("\"" + _ + "\"").mkString("[", ",", "]")}}""")
+      ListMap("skew" -> "zipf", "factor" -> 10) ++
+        level(dst, 10, 1.3, skewProbes.filter(Session.selected)) +
+        ("census" -> ListMap(census: _*))
     }
-    // ---- hub-degree graph level (round 14): the two graph probes
-    // against the power-law-head co-purchase graph buildSkewedGraph
-    // produces — the degree orientation's actual adversary. Uniform
-    // copies x volume, so the exponent base is `copies`; threshold
-    // matches the deep uniform levels (0.9).
-    val hubCopies = 30
-    val hubJson = if (sys.env.get("SPARK_GRAFT_SKEW").contains("off"))
-      None
-    else {
+    // Uniform copies x volume, so the exponent base is `copies`; the
+    // threshold matches the deep uniform levels.
+    val hub = Option.when(skew) {
       val dst = s"${dstRoot}_hub"
-      buildSkewedGraph(spark, base, dst, hubCopies)
-      try {
-        operators.Advanced.bucketize(spark, dst, "lineitem", "l_orderkey")
-        ()
-      } catch { case e: Throwable =>
-        System.err.println(s"[scale] hub warmup failed (non-fatal): $e")
-      }
-      val probes: Seq[(String, String => Long)] = Seq(
-        "q_graph_triangle" -> runQ("q_graph_triangle"),
-        "q_graph_commonnbrs" -> runQ("q_graph_commonnbrs"),
-        // round-15 (r14 ask #8): the wedge fallback's cost is
-        // sum C(d_out, 2) — the power-law head is ITS adversary even
-        // more than the broadcast plan's, and until now the hub level
-        // probed only the broadcast spelling
-        "q_graph_triangle_wedge" -> wedgeTriangle)
-      val selected = probes.filter { case (q, _) =>
-        only.forall(_.contains(q)) }
-      val passResults = (1 to passes).map { p =>
-        val b = selected.map { case (q, f) =>
-          q -> sampleF(s"bh/$p", q, f, base) }.toMap
-        val sc = selected.map { case (q, f) =>
-          q -> sampleF(s"sh/$p", q, f, dst) }.toMap
-        (b, sc)
-      }
-      val rows = selected.map { case (q, _) =>
-        growthRow(q, passResults.flatMap(_._1(q)).minByOption(_._1),
-          passResults.flatMap(_._2(q)).minByOption(_._1),
-          hubCopies.toDouble)
-      }
-      // the wedge series keeps its own O(m^1.5) design bound here too
-      val flagged = rows.collect { case (q, _, e)
-        if e > (if (q.endsWith("_wedge")) 1.5 else 0.9) => q }
-      Some(s"""{"skew":"hub","factor":$hubCopies,"threshold":0.9,""" +
-        s""""queries":${rows.map { case (q, j, _) => "\"" + q + "\":" + j }
-          .mkString("{", ",", "}")},""" +
-        s""""flagged":${
-          flagged.map("\"" + _ + "\"").mkString("[", ",", "]")}}""")
+      buildSkewedGraph(spark, base, dst, 30)
+      ListMap("skew" -> "hub", "factor" -> 30) ++
+        level(dst, 30, 0.9, hubProbes.filter(Session.selected))
     }
-    val out = s"""{"base_dir":"$base",""" +
-      s""""levels":${levelJsons.mkString("[", ",", "]")},""" +
-      skewJson.map(j => s""""skew_level":$j,""").getOrElse("") +
-      hubJson.map(j => s""""skew_graph_level":$j,""").getOrElse("") +
-      s""""git_sha":"${GitSha.resolve()}"}"""
-    // SPARK_GRAFT_OUT redirects the artifact — a SUBSET re-measure
-    // (SPARK_GRAFT_ONLY) must never clobber the full record; its rows
-    // fold back into BENCH_SCALE.json through the documented MIN rule
-    // with the merge noted in the artifact.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_OUT",
-      "/root/repo/BENCH_SCALE.json")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outPath),
-      (out + "\n").getBytes("UTF-8"))
-    println(out)
+    val record = ListMap("base_dir" -> base, "levels" -> uniform) ++
+      zipf.map("skew_level" -> _) ++ hub.map("skew_graph_level" -> _) +
+      ("git_sha" -> GitSha.resolve())
+    Measure.recordPath("BENCH_SCALE.json").foreach(Measure.writeJson(_, record))
+    println(Measure.mapper.writeValueAsString(record))
     spark.stop()
   }
 }

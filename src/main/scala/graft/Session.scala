@@ -15,6 +15,14 @@ object Session {
   def sfDir: String =
     sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+  /** Query subset of the mains: `SPARK_GRAFT_ONLY=q_a,q_b`, else every
+    * query.
+    */
+  def only: Option[Set[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+
+  def selected(query: String): Boolean = only.forall(_.contains(query))
+
   /** `local[cores]` with one shuffle partition per core, UTC and the
     * top-k planner rules. A live session is reused, with these runtime
     * confs applied to it again.

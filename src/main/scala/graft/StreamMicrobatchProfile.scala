@@ -1,5 +1,7 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -38,35 +40,26 @@ object StreamMicrobatchProfile {
       override def onQueryProgress(
           e: StreamingQueryListener.QueryProgressEvent): Unit = {
         val p = e.progress
-        val d = p.durationMs
         def ms(k: String): Long =
-          Option(d.get(k)).map(_.longValue()).getOrElse(-1L)
-        val state = p.stateOperators.map { so =>
-          s"""{"op":"${so.operatorName}","rowsTotal":${so.numRowsTotal},""" +
-            s""""rowsUpdated":${so.numRowsUpdated},""" +
-            s""""commitMs":${so.commitTimeMs},""" +
-            s""""memUsedBytes":${so.memoryUsedBytes}}"""
-        }.mkString("[", ",", "]")
-        rows.add(
-          s"""{"twin":"${twinOf.get(p.runId)}","query":"${p.name}",""" +
-            s""""batch":${p.batchId},""" +
-            s""""rowsIn":${p.numInputRows},""" +
-            s""""triggerMs":${ms("triggerExecution")},""" +
-            s""""addBatchMs":${ms("addBatch")},""" +
-            s""""getBatchMs":${ms("getBatch")},""" +
-            s""""latestOffsetMs":${ms("latestOffset")},""" +
-            s""""walCommitMs":${ms("walCommit")},""" +
-            s""""commitOffsetsMs":${ms("commitOffsets")},""" +
-            s""""stateOps":$state}""")
+          Option(p.durationMs.get(k)).map(_.longValue()).getOrElse(-1L)
+        rows.add(Measure.mapper.writeValueAsString(ListMap(
+          "twin" -> twinOf.get(p.runId), "query" -> p.name,
+          "batch" -> p.batchId, "rowsIn" -> p.numInputRows,
+          "triggerMs" -> ms("triggerExecution"), "addBatchMs" -> ms("addBatch"),
+          "getBatchMs" -> ms("getBatch"), "latestOffsetMs" -> ms("latestOffset"),
+          "walCommitMs" -> ms("walCommit"),
+          "commitOffsetsMs" -> ms("commitOffsets"),
+          "stateOps" -> p.stateOperators.toSeq.map(so => ListMap(
+            "op" -> so.operatorName, "rowsTotal" -> so.numRowsTotal,
+            "rowsUpdated" -> so.numRowsUpdated,
+            "commitMs" -> so.commitTimeMs,
+            "memUsedBytes" -> so.memoryUsedBytes)))))
       }
     })
 
     for (q <- Seq("q_streaming_sessionwin", "q_streaming_ohlc")) {
       current = q
-      val t0 = System.nanoTime()
-      SparkEntry.queries(q)(spark, sfDir).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[profile] $q total ${dt}%.2f s")
+      Measure.run(s"profile $q")(SparkEntry.queries(q)(spark, sfDir))
     }
     // progress events reach the listener through the async listener bus
     ListenerBusDrain.drain(spark.sparkContext)

@@ -473,24 +473,15 @@ object Retrieval extends QueryModule {
     sys.props.get("graft.triangle.cap").map(_.toLong)
       .getOrElse(200000000L)
 
-  /** Strategy decision, factored out of the query so (a) the
-    * SPARK_GRAFT_TRIANGLE env override can force either spelling under
-    * the scale probe (the wedge fallback needs its own measured
-    * exponent series — it is the only plan available past the gate)
-    * and (b) the gate-flip spec can observe which plan the registered
-    * query ACTUALLY chose, not just that the two spellings agree.
+  /** Strategy decision, factored out of the query so the gate-flip spec
+    * can observe which plan the registered query ACTUALLY chose, not
+    * just that the two spellings agree. (The scale probe times the wedge
+    * spelling by calling [[triangleByWedge]] directly.)
     */
   @volatile private[graft] var lastTriangleStrategy: String = ""
   private[graft] def triangleStrategy(edgeCount: Long): String = {
-    // the system property wins (ScaleProbe flips it in-process for the
-    // wedge exponent series); the env var is the operator-facing knob
-    val forced = sys.props.get("graft.triangle.force")
-      .orElse(sys.env.get("SPARK_GRAFT_TRIANGLE"))
-      .map(_.toLowerCase)
-      .filter(v => v == "wedge" || v == "broadcast")
-    val chosen = forced.getOrElse(
-      if (edgeCount <= TriangleBroadcastEdgeCap) "broadcast"
-      else "wedge")
+    val chosen =
+      if (edgeCount <= TriangleBroadcastEdgeCap) "broadcast" else "wedge"
     lastTriangleStrategy = chosen
     chosen
   }

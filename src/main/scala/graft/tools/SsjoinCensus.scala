@@ -1,5 +1,13 @@
 package graft.tools
 
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.DataFrame
+
+import graft.{Measure, Session, SparkEntry}
+import graft.Measure.round
+import graft.operators.TextPipeline
+
 /** Dev utility (round 15, r14 ask #5): measure the positional PPJoin
   * filter's candidate pruning on q_ssjoin_prefix — counts the
   * prefix-lemma-only candidate set, the positionally-filtered set,
@@ -12,33 +20,29 @@ package graft.tools
   */
 object SsjoinCensus {
   def main(args: Array[String]): Unit = {
-    val sfDir = graft.Session.sfDir
-    val spark = graft.Session.local()
+    val sfDir = Session.sfDir
+    val spark = Session.local()
     // without it the first phase also pays the session's start-up
-    graft.Session.warm(spark, sfDir)
-    // each phase is timed on its second run: whichever phase runs first
-    // also pays this pipeline's first code generation, which the
+    Session.warm(spark, sfDir)
+    // each phase runs twice and keeps its best run: whichever phase runs
+    // first also pays this pipeline's first code generation, which the
     // session warm-up does not cover
-    def timed(body: => Long): (Long, Double) = {
-      body
-      val t0 = System.nanoTime()
-      val n = body
-      (n, (System.nanoTime() - t0) / 1e9)
-    }
-    val (pre, tPre) = timed(
-      graft.operators.TextPipeline
-        .ssjoinCandidates(spark, sfDir, positional = false).count())
-    val (post, tPost) = timed(
-      graft.operators.TextPipeline
-        .ssjoinCandidates(spark, sfDir, positional = true).count())
-    val (out, tOut) = timed(
-      graft.SparkEntry.queries("q_ssjoin_prefix")(spark, sfDir).count())
-    println(f"""{"dir":"$sfDir","cand_prefix_only":$pre,""" +
-      f""""cand_positional":$post,"output_pairs":$out,""" +
-      f""""excess_before":${pre.toDouble / out}%.2f,""" +
-      f""""excess_after":${post.toDouble / out}%.2f,""" +
-      f""""t_prefix":$tPre%.2f,"t_positional":$tPost%.2f,""" +
-      f""""t_full_query":$tOut%.2f}""")
+    val phases = Seq[(String, () => DataFrame)](
+      "prefix" -> (() =>
+        TextPipeline.ssjoinCandidates(spark, sfDir, positional = false)),
+      "positional" -> (() =>
+        TextPipeline.ssjoinCandidates(spark, sfDir, positional = true)),
+      "full_query" -> (() => SparkEntry.queries("q_ssjoin_prefix")(spark, sfDir)))
+    val samples = Measure.sweep(phases, 2)
+    val Seq(pre, post, out) = phases.map { case (p, _) =>
+      Measure.best(samples(p)).getOrElse(sys.error(s"phase $p failed")) }
+    println(Measure.mapper.writeValueAsString(ListMap("dir" -> sfDir,
+      "cand_prefix_only" -> pre.rows, "cand_positional" -> post.rows,
+      "output_pairs" -> out.rows,
+      "excess_before" -> round(pre.rows.toDouble / out.rows),
+      "excess_after" -> round(post.rows.toDouble / out.rows),
+      "t_prefix" -> round(pre.total), "t_positional" -> round(post.total),
+      "t_full_query" -> round(out.total))))
     spark.stop()
   }
 }

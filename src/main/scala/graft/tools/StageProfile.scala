@@ -6,9 +6,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 /** Dev utility (optimization rounds): per-STAGE breakdown of individual
   * registered queries — wall duration, summed executor task time, input
   * bytes, shuffle read/write bytes, task count — attributed by stage
-  * callsite, after the query's total. Says WHICH operator of a slow
-  * query owns the time. `SPARK_GRAFT_EXPLAIN=1` also prints each query's
-  * physical plan, with every operator's arguments inline, before it runs.
+  * callsite, after the query's [[graft.Measure]] total and build time
+  * (the stages of the jobs a query launches while it is built are
+  * listed too). Says WHICH operator of a slow query owns the time.
+  * `SPARK_GRAFT_EXPLAIN=1` also prints each query's physical plan, with
+  * every operator's arguments inline, before it runs; the printing then
+  * counts in the build time.
   *
   * {{{
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
@@ -64,13 +67,14 @@ object StageProfile {
     names.foreach { name =>
       ListenerBusDrain.drain(sc)
       stages.clear()
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      if (explain) df.explain()
-      val t0 = System.nanoTime()
-      val n = df.count()
-      val dt = (System.nanoTime() - t0) / 1e9
+      val run = graft.Measure.run(name) {
+        val df = graft.SparkEntry.queries(name)(spark, sfDir)
+        if (explain) df.explain()
+        df
+      }
       ListenerBusDrain.drain(sc)
-      println(f"==== $name  total=$dt%.2fs rows=$n")
+      println(s"==== $name  " + run.fold(e => s"FAILED $e", s =>
+        f"total=${s.total}%.2fs build=${s.build}%.2fs rows=${s.rows}"))
       import scala.jdk.CollectionConverters._
       stages.asScala.toSeq.sortBy(-_.taskMs).foreach { r =>
         println(f"  stage ${r.id}%4d wall=${r.wallMs}%6dms task=${r.taskMs}%7dms " +

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-17 ask #7: the probe-pool floor rule — "every non-streaming
@@ -27,23 +29,12 @@ class ProbePoolSpec extends AnyFunSuite {
     val f = new java.io.File("BENCH_DETAIL.json")
     if (!f.exists()) None
     else {
-      val txt = new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      // minimal extraction of the flat {"queries":{"name":sec,...}}
-      // object — no JSON lib on the test classpath. The number
-      // pattern must swallow a scientific-notation exponent whole:
-      // with a bare [0-9.]+ a timing serialized as 9.5E-4 matches as
-      // 9.5 and falsely conscripts a sub-floor query into the pool
-      // (r18 ADVICE).
-      val qsec =
-        """"(q_[a-z0-9_]+)"\s*:\s*([0-9.]+(?:[eE][+-]?[0-9]+)?)""".r
-      val start = txt.indexOf("\"queries\"")
-      if (start < 0)
-        fail("BENCH_DETAIL.json has no \"queries\" key — the record " +
+      val queries = Measure.mapper.readTree(f).get("queries")
+      if (queries == null || !queries.isObject)
+        fail("BENCH_DETAIL.json has no \"queries\" object — the record " +
           "is malformed; regenerate it with a full bench run")
-      val obj = txt.substring(start, txt.indexOf("}", start) + 1)
-      Some(qsec.findAllMatchIn(obj)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap)
+      Some(queries.properties.asScala
+        .map(e => e.getKey -> e.getValue.asDouble).toMap)
     }
   }
 

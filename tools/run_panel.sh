@@ -23,7 +23,7 @@ SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
   SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
   SPARK_GRAFT_PASSES="${SPARK_GRAFT_PASSES:-3}" \
   SPARK_GRAFT_ONLY="$PANEL_CHEAP,$PANEL_MID,$PANEL_HEAVY" \
-  SPARK_GRAFT_DETAIL_OUT="$DETAIL" \
+  SPARK_GRAFT_OUT="$DETAIL" \
   sbt -batch "runMain graft.Bench" >/dev/null
 LOAD_AFTER=$(cut -d' ' -f1 /proc/loadavg)
 

@@ -543,7 +543,6 @@ object Advanced extends QueryModule {
         .groupBy("o_orderpriority")
         .agg(sketch(col("o_custkey")).as("sk"),
           count_distinct(col("o_custkey")).as("exact_custs"))
-        .localCheckpoint() // two consumers: per-cell rows + the merge
       val per = sk.select(col("o_orderpriority"),
         estimate(col("sk")).as("approx_custs"), col("exact_custs"))
       val total = sk.agg(mergeSketches(col("sk")).as("msk"))

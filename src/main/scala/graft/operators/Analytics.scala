@@ -159,7 +159,8 @@ object Analytics extends QueryModule {
             count(lit(1)).as("f_band"),
             floor(sum(dec(col("o_totalprice"))).cast("double") / 10000.0)
               .cast("long").as("m_band"))
-          .localCheckpoint() // 4 consumers below; see round-6 reuse note
+          // kept: 0.38 -> 0.50 s without, +13 % with a shared repartition
+          .localCheckpoint()
         val n = m.agg(count(lit(1)).as("n"))
         val joined = m
           .join(broadcast(quartileByBand(m, "r_band", "r_score", n)),

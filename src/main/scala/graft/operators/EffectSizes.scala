@@ -56,14 +56,10 @@ object EffectSizes extends QueryModule {
           .filter(col("l_linenumber") <= 4)
           .select(col("l_orderkey").as("ok"),
             col("l_returnflag").as("cat"))
-        // localCheckpoint: the ≤4-line slice feeds the qualifying-item
-        // census AND the (item, cat) aggregate.
-        val liq = li.localCheckpoint()
-        val items = liq.groupBy("ok").agg(count(lit(1)).as("m"))
+        val items = li.groupBy("ok").agg(count(lit(1)).as("m"))
           .filter(col("m") === 4).select("ok")
-        val nij = liq.join(items, "ok").groupBy("ok", "cat")
+        val nij = li.join(items, "ok").groupBy("ok", "cat")
           .agg(count(lit(1)).as("nij"))
-          .localCheckpoint()
         val gTot = nij.groupBy("ok")
           .agg(sum(col("nij") * col("nij")).as("s2"))
           .agg(count(lit(1)).as("n_items"),

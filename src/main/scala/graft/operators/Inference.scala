@@ -54,13 +54,11 @@ object Inference extends QueryModule {
           .filter(col("l_linenumber") <= 3)
           .select(col("l_orderkey").as("ok"), col("l_linenumber").as("j"),
             (col("l_quantity") >= 25).cast("long").as("x"))
-          .localCheckpoint()
         // blocks: orders carrying all three treatments (exactly the
         // ≤3-line slice rows counted per order).
         val blocks = li.groupBy("ok")
           .agg(count(lit(1)).as("c"), sum("x").as("l"))
           .filter(col("c") === 3)
-          .localCheckpoint()
         val rowsM = blocks.agg(count(lit(1)).as("n_blocks"),
           sum("l").cast("long").as("t"),
           sum(col("l") * col("l")).cast("long").as("sl2"))
@@ -178,13 +176,11 @@ object Inference extends QueryModule {
             sum(expr("CAST(round(l_quantity, 0) AS BIGINT)"))
               .cast("long").as("qty"))
         val top = pm.orderBy(col("rev").desc, col("pk")).limit(50)
-          .localCheckpoint()
         val r = top
           .withColumn("tr", row_number()
             .over(Window.orderBy(col("rev").desc, col("pk"))).cast("long"))
           .withColumn("sr", row_number()
             .over(Window.orderBy(col("qty").desc, col("pk"))).cast("long"))
-          .localCheckpoint()
         val a = r.select(col("sr").as("si"), col("tr").as("ti"))
         val b = r.select(col("sr").as("sj"), col("tr").as("tj"))
         val conc = a.join(b, col("sj") < col("si"))
@@ -214,7 +210,6 @@ object Inference extends QueryModule {
         val ev = table(s, d, "events")
           .select(col("event_type").as("et"),
             round(col("value"), 0).cast("long").as("v"))
-          .localCheckpoint()
         val hist = ev.groupBy("v").agg(count(lit(1)).as("c"))
         val wb = Window.orderBy("v")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)

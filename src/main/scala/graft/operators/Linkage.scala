@@ -66,7 +66,6 @@ object Linkage extends QueryModule {
         val docs = table(s, d, "documents")
           .select(col("doc_id"), col("source"), col("lang"),
             col("n_chars"))
-          .localCheckpoint()
         val pairs = TextPipeline.ngramPairs(s, d)
           .select(col("a_id"), col("b_id"))
         val fa = docs.select(col("doc_id").as("a_id"),

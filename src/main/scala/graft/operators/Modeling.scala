@@ -142,7 +142,6 @@ object Modeling extends QueryModule {
         val ht = ev.filter(col("cal"))
           .groupBy(col("event_type"), col("v").as("vt"))
           .agg(count(lit(1)).as("ct"))
-          .localCheckpoint()
         val he = ev.filter(!col("cal"))
           .groupBy(col("event_type"), col("v").as("ve"))
           .agg(count(lit(1)).as("ce"))

@@ -79,7 +79,6 @@ object Operational extends QueryModule {
           .filter(col("pv").isNotNull)
           .groupBy((col("v") - col("pv")).as("dl"))
           .agg(count(lit(1)).as("c"))
-          .localCheckpoint()
         val wc = Window.orderBy("dl")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val tot = hist.agg(sum("c").as("n"))
@@ -163,7 +162,7 @@ object Operational extends QueryModule {
           .withColumn("cumd", sum(col("dem") * col("c")).over(wb))
           .withColumn("n", sum("c").over(wt))
           .withColumn("sumd", sum(col("dem") * col("c")).over(wt))
-          .localCheckpoint()
+          .repartition(col("event_type")) // its readers reuse this exchange
         val qs = r.groupBy("event_type")
           .agg(max("n").as("n_days"), max("sumd").as("sum_dem"),
             min(when(col("cum") * 4 >= col("n") * 3, col("dem")))
@@ -216,7 +215,6 @@ object Operational extends QueryModule {
             datediff(col("cd"), col("od")).cast("long").as("cyc"))
           .groupBy("mo", "mc")
           .agg(count(lit(1)).as("n"), sum("cyc").as("scyc"))
-          .localCheckpoint()
         val arr = cells.groupBy(col("mo").as("m"))
           .agg(sum("n").cast("long").as("arrivals"))
         val fin = cells.groupBy(col("mc").as("m"))
@@ -282,11 +280,8 @@ object Operational extends QueryModule {
           .groupBy("cohort", "dev").agg(sum("epc").as("v"))
         val wc = Window.partitionBy("cohort").orderBy("dev")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        // localCheckpoint: the cumulative triangle is consumed twice
-        // (both sides of the dev/dev+1 self-join).
         val cum = cells.withColumn("cumv", sum("v").over(wc))
           .select(col("cohort"), col("dev"), col("cumv"))
-          .localCheckpoint()
         cum.as("a").join(cum.as("b"),
             col("a.cohort") === col("b.cohort")
               && col("b.dev") === col("a.dev") + 1)

@@ -43,7 +43,6 @@ object Planner extends QueryModule {
         val o5 = table(s, d, "orders")
           .filter(col("o_orderpriority") === "1-URGENT")
           .select(col("o_orderkey").as("ok"), col("o_custkey").as("ck"))
-          .localCheckpoint()
         val lStats = l.agg(count(lit(1)).as("nl"),
           countDistinct("ok").as("lok"), countDistinct("pk").as("lpk"))
         val oStats = o5.agg(count(lit(1)).as("no"),
@@ -55,7 +54,7 @@ object Planner extends QueryModule {
           .agg(count(lit(1)).as("np"),
             countDistinct("p_partkey").as("ppk"))
         // measured intermediates (exact counts of the real joins)
-        val lo = l.join(o5, "ok").localCheckpoint()
+        val lo = l.join(o5, "ok")
         val aLo = lo.agg(count(lit(1)).as("a_lo"))
         val aLoc = lo.join(table(s, d, "customer")
             .select(col("c_custkey").as("ck")), "ck")
@@ -65,7 +64,6 @@ object Planner extends QueryModule {
           .agg(count(lit(1)).as("a_oc"))
         val lp = l.join(table(s, d, "part")
             .select(col("p_partkey").as("pk")), "pk")
-          .localCheckpoint()
         val aLp = lp.agg(count(lit(1)).as("a_lp"))
         val aLpo = lp.join(o5.select("ok"), "ok")
           .agg(count(lit(1)).as("a_lpo"))

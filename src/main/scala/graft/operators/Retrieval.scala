@@ -524,6 +524,7 @@ object Retrieval extends QueryModule {
       when(srcFirst, col("u")).otherwise(col("v")).as("src"),
       when(srcFirst, col("v")).otherwise(col("u")).as("dst"),
       when(srcFirst, col("dv")).otherwise(col("du")).as("ddst"))
+      // kept: q_graph_triangle 2.75 -> 3.69 s without (its gate counts it)
       .localCheckpoint()
   }
 

@@ -99,11 +99,8 @@ object Scoring extends QueryModule {
       val big = docs.select(NGramGenerator(toks, 2).alias("gram"))
         .groupBy("gram").agg(count(lit(1)).as("c2"))
         .filter(col("c2") >= 5)
-      // localCheckpoint: the unigram relation joins on BOTH bigram
-      // positions
       val uni = docs.select(explode(toks).as("w"))
         .groupBy("w").agg(count(lit(1)).as("c1"))
-        .localCheckpoint()
       val nTot = uni.agg(sum("c1").cast("long").as("n"))
       big
         .withColumn("w1", split(col("gram"), " ").getItem(0))

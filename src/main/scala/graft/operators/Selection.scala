@@ -167,9 +167,7 @@ object Selection extends QueryModule {
             expr("(nd * 1000) div nt").as("s1"),
             expr("(st * 1000) div nt").as("s2"),
             (-abs(col("n_chars") - lit(300L))).as("s3"))
-          // four consumers (three rank maps + the join spine) read this
-          // 32-byte/row relation: materialize ONCE so the corpus is
-          // tokenized one time, not four (the clusterLoop discipline)
+          // kept: 0.26 -> 0.32 s without, +12 % with a shared repartition
           .localCheckpoint()
         val j = t
           .join(broadcast(rankMap(t, "s1", "r1")), "s1")

@@ -962,6 +962,7 @@ object Similarity extends QueryModule {
     "q_srp_pairs" -> ((s, d) => {
       val sigs = table(s, d, "embeddings")
         .select(col("vec_id"), col("label"), srpSigExpr.as("sig"))
+        // kept: 0.35 -> 0.68 s without, or with a shared repartition
         .localCheckpoint()
       val banded = sigs.select(col("vec_id"), col("sig"),
           explode(array((0 until 4).map(b =>

@@ -499,7 +499,6 @@ object Statistics extends QueryModule {
         val grid = spans.groupBy("cohort", "wk")
           .agg(sum("death").as("d"),
             sum(lit(1L) - col("death")).as("c"))
-          .localCheckpoint()
         val tot = grid.groupBy("cohort")
           .agg(sum(col("d") + col("c")).as("nt"))
         val prior = Window.partitionBy("cohort").orderBy("wk")
@@ -644,7 +643,6 @@ object Statistics extends QueryModule {
             sum("death").as("dt"),
             sum((col("grp") === 1).cast("long")).as("t1c"),
             count(lit(1)).as("tc"))
-          .localCheckpoint()
         val deaths = grid.filter(col("dt") > 0)
           .select(col("dur").as("td"), col("d1"), col("dt"))
         val atr = deaths

@@ -49,7 +49,7 @@ object Stratified extends QueryModule {
             expr("(100 * nx * ny) div (nx + ny)").as("w100"),
             expr("CAST(round(100 * (CAST(sx AS DOUBLE) / nx" +
               " - CAST(sy AS DOUBLE) / ny), 0) AS BIGINT)").as("d100"))
-          .localCheckpoint()
+          .repartition(col("source")) // its two readers reuse this exchange
         val pooled = per.agg(count(lit(1)).as("k"),
             sum("w100").cast("long").as("sw"),
             sum(col("w100") * col("d100")).cast("long").as("swd"))
@@ -176,7 +176,6 @@ object Stratified extends QueryModule {
             count(lit(1)).as("n"))
           .filter(col("a") + col("b") > 0 && col("c") + col("dd") > 0
             && col("a") + col("c") > 0 && col("b") + col("dd") > 0)
-          .localCheckpoint()
         val pooled = strata.agg(
           count(lit(1)).as("n_strata"),
           sum(dec((col("a") * col("dd")).cast("double") / col("n")))
@@ -322,6 +321,7 @@ object Stratified extends QueryModule {
               .as("c2"),
             sum(when(col("h") === 1L, col("q"))).cast("long").as("u2"))
           .filter(col("u1") > 0 && col("u2") > 0)
+          // kept: 0.47 -> 0.55 s without, +15 % with a shared repartition
           .localCheckpoint()
         val aSide = wide.select(col("brand").as("brand_a"),
           col("u1").as("qa1"), col("u2").as("qa2"))

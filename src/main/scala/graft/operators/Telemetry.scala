@@ -58,7 +58,6 @@ object Telemetry extends QueryModule {
           // corpus.
           .select(col("et"), col("day"),
             expr("(cents - pmod(cents, 100)) div 100").as("v"))
-          .localCheckpoint()
         val st = daily.groupBy("et")
           .agg(count(lit(1)).as("n"), sum("v").cast("long").as("sv"),
             sum(col("v") * col("v")).cast("long").as("qv"))
@@ -105,7 +104,6 @@ object Telemetry extends QueryModule {
           .agg(count(lit(1)).as("n"),
             sum((col("event_type") === "click").cast("long"))
               .as("n_click"))
-          .localCheckpoint()
         val tot = daily.agg(sum("n").cast("long").as("tn"),
           sum("n_click").cast("long").as("tc"))
         val pbar = col("tc").cast("double") / col("tn").cast("double")

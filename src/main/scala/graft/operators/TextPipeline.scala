@@ -382,15 +382,13 @@ object TextPipeline extends QueryModule {
       // r18: positional 8-grams through the codegen'd generator (pos
       // twin of NGramGenerator) instead of the interpreted
       // transform/sequence HOF chain — same (pos0, gram) stream,
-      // whole-stage-compiled. localCheckpoint: TWO consumers (the df
-      // census and the hit join) re-ran the generation without it.
+      // whole-stage-compiled.
       val sh = table(s, d, "documents")
         .select(col("doc_id"),
           graft.functions.NGramGenerator.pos(toks, 8)
             .as(Seq("pos0", "g")))
         .select(col("doc_id"), (col("pos0") + 1).cast("long").as("pos"),
           col("g"))
-        .localCheckpoint()
       val rep = sh.groupBy("g")
         .agg(count_distinct(col("doc_id")).as("df"))
         .filter(col("df") >= 2).select("g")
@@ -432,15 +430,13 @@ object TextPipeline extends QueryModule {
       val isBench = substring(md5(concat(lit("bm"),
         col("doc_id").cast("string"))), 1, 1) === "0"
       // r18: positional 13-grams through the codegen'd generator — see
-      // q_dedup_spans. checkpointed: the bench-gram distinct and the
-      // training-side probe both read the stream.
+      // q_dedup_spans.
       val sh = table(s, d, "documents")
         .select(col("doc_id"), isBench.as("bench"),
           graft.functions.NGramGenerator.pos(toks, 13)
             .as(Seq("pos0", "g")))
         .select(col("doc_id"), col("bench"),
           (col("pos0") + 1).cast("long").as("pos"), col("g"))
-        .localCheckpoint()
       val benchGrams = sh.filter(col("bench")).select("g").distinct()
       val hit = sh.filter(!col("bench"))
         .join(broadcast(benchGrams), "g")

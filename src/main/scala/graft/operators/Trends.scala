@@ -47,14 +47,10 @@ object Trends extends QueryModule {
           expr("CAST(round(l_extendedprice * 100, 0) AS BIGINT)")
             .as("epc"),
           expr("CAST(round(l_quantity, 0) AS BIGINT)").as("q"))
-        // localCheckpoint: the month-grain aggregate feeds BOTH the
-        // base-month slice and the index join — without it the scan +
-        // shuffle runs twice (the round-6 union-leg lesson).
         val pm = li.groupBy("pk", "m")
           .agg(sum("epc").as("sep"), sum("q").as("sq"))
           .select(col("pk"), col("m"), expr("sep div sq").as("p"),
             col("sq"))
-          .localCheckpoint()
         val m0 = pm.agg(min("m").as("m0"))
         val base = pm.crossJoin(broadcast(m0))
           .filter(col("m") === col("m0"))
@@ -537,7 +533,7 @@ object Trends extends QueryModule {
           sum(when(col("c") < 100, col("c")).otherwise(0L))
             .as("rare_mass"))
         val pairs = TextPipeline.ngramPairs(s, d)
-          .select(col("a_id"), col("b_id")).localCheckpoint()
+          .select(col("a_id"), col("b_id"))
         val dup = pairs.agg(count(lit(1)).as("n_dup_pairs"))
         val dupDocs = pairs.select(explode(array(col("a_id"),
             col("b_id"))).as("doc_id")).distinct()

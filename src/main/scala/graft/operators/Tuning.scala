@@ -121,7 +121,6 @@ object Tuning extends QueryModule {
         val sig = table(s, d, "documents")
           .select(col("doc_id"),
             graft.functions.SimHash64(split(col("text"), " ")).as("sh"))
-          .localCheckpoint()
         val bands = sig.select(col("doc_id"),
           posexplode(array((0 until 4).map(i =>
             shiftright(col("sh"), 16 * i).bitwiseAND(lit(0xFFFFL))): _*))
@@ -142,7 +141,6 @@ object Tuning extends QueryModule {
           .filter(col("ham") <= 3)
         val truth = TextPipeline.ngramPairs(s, d)
           .select(col("a_id"), col("b_id"), lit(1L).as("hit"))
-          .localCheckpoint()
         val census = ham.join(truth, Seq("a_id", "b_id"), "left")
           .groupBy("ham")
           .agg(count(lit(1)).as("cp"),
@@ -163,11 +161,9 @@ object Tuning extends QueryModule {
       }),
 
       "q_minhash_eval" -> ((s, d) => {
-        // localCheckpoint: the shingled relation feeds THREE consumers
-        // (the signature stream and both verification sides) — without
-        // it each one re-tokenizes and re-shingles the corpus
         val docs = table(s, d, "documents")
           .select(col("doc_id"), TextPipeline.shingles(toks).as("sh"))
+          // kept: 1.19 -> 1.32 s with a shared repartition instead
           .localCheckpoint()
         val ex = docs.select(col("doc_id"), explode(col("sh")).as("sg"))
         // Hash the DISTINCT shingle vocabulary once (16 md5s per
@@ -232,6 +228,7 @@ object Tuning extends QueryModule {
       "q_lsh_curve" -> ((s, d) => {
         val docs = table(s, d, "documents")
           .select(col("doc_id"), TextPipeline.shingles(toks).as("sh"))
+          // kept with sig's: 1.40 -> 1.93 s with shared repartitions
           .localCheckpoint()
         val ex = docs.select(col("doc_id"), explode(col("sh")).as("sg"))
         val hashedVocab = ex.select(col("sg")).distinct()
@@ -239,12 +236,9 @@ object Tuning extends QueryModule {
             (0 until NumHashes).map(j => mh(j).as(s"g$j")): _*)
         val mins = (0 until NumHashes)
           .map(j => min(col(s"g$j")).as(s"h$j"))
-        // localCheckpoint: the signature relation feeds all THREE band
-        // geometries through the union — without it the shingle join +
-        // 16-way min aggregate recomputes per geometry
         val sig = ex.join(broadcast(hashedVocab), "sg")
           .groupBy("doc_id").agg(mins.head, mins.tail: _*)
-          .localCheckpoint()
+          .localCheckpoint() // kept: see docs above
         def bandKeys(r: Int): Column = array((0 until NumHashes / r).map {
           i => concat_ws("_",
             (0 until r).map(k => col(s"h${i * r + k}")): _*)
@@ -265,12 +259,8 @@ object Tuning extends QueryModule {
           .filter(col("i") < col("j"))
           .select(col("r"), col("a_id"), col("b_id"))
           .distinct()
-        // localCheckpoint: the O(pairs) truth relation feeds the count
-        // action AND the join — without it the full pair join runs
-        // twice
         val truth = TextPipeline.ngramPairs(s, d)
           .select(col("a_id"), col("b_id"), lit(1L).as("hit"))
-          .localCheckpoint()
         val nE = truth.count()
         cand
           .join(truth, Seq("a_id", "b_id"), "left")
@@ -297,16 +287,12 @@ object Tuning extends QueryModule {
           .select(col("doc_id"), col("source"))
         val pairs = TextPipeline.ngramPairs(s, d)
           .select(col("a_id"), col("b_id"))
-        // localCheckpoint: the labeled O(pairs) relation feeds the m
-        // count, the within-edge rollup AND the degree stream — without
-        // it the pair join recomputes three times
         val lab = pairs
           .join(src.select(col("doc_id").as("a_id"),
             col("source").as("sa")), "a_id")
           .join(src.select(col("doc_id").as("b_id"),
             col("source").as("sb")), "b_id")
-          .localCheckpoint()
-        val m = lab.count()
+        val m = lab.agg(count(lit(1)).as("m"))
         val ec = lab.filter(col("sa") === col("sb"))
           .groupBy(col("sa").as("source"))
           .agg(count(lit(1)).as("e_within"))
@@ -316,11 +302,15 @@ object Tuning extends QueryModule {
           .groupBy("source").agg(count(lit(1)).as("deg_c"))
         deg.join(ec, Seq("source"), "left")
           .na.fill(0L, Seq("e_within"))
-          .agg(sum(lit(4L) * lit(m) * col("e_within")
-            - col("deg_c") * col("deg_c")).as("q_num"))
-          .select(lit(m).as("m"), col("q_num"),
-            (col("q_num").cast("double") /
-              lit(4.0 * m.toDouble * m.toDouble)).as("modularity"))
+          .agg(sum("e_within").as("se"),
+            sum(col("deg_c") * col("deg_c")).as("sd2"))
+          .crossJoin(m)
+          .select(col("m"),
+            (lit(4L) * col("m") * col("se") - col("sd2")).as("q_num"))
+          .select(col("m"), col("q_num"),
+            (col("q_num").cast("double") / (lit(4.0)
+              * col("m").cast("double") * col("m").cast("double")))
+              .as("modularity"))
       }),
 
       // --- chi-square standardized residuals (the per-cell

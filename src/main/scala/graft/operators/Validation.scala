@@ -297,14 +297,8 @@ object Validation extends QueryModule {
       // fleet-scale curation run behaves. The 5-row stage relation's
       // windows are bounded by the stage count, never by data. ---
       "q_corpus_pipeline" -> ((s, d) => {
-        // checkpoint the scan: predicate pushdown sinks the heavy
-        // split()-length gate into the single-file scan stage (one
-        // task); materializing the repartitioned raw docs first keeps
-        // the whole funnel at session width (measured r18: ~0.9 s
-        // serial scan stage + 0.9 s serial shingle stage without it)
         val docs = table(s, d, "documents")
           .select(col("doc_id"), col("text"), col("n_chars"))
-          .localCheckpoint()
         val s1 = docs.filter(length(trim(col("text"))) > 0)
         val s2 = s1.filter(
           size(split(col("text"), " ")).between(20, 10000) &&

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.io.File
 
+import scala.collection.mutable
+
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.{col, unix_micros}
@@ -18,33 +20,50 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType,
   */
 object Replay {
 
-  /** Per-query CLONED session with the streaming state-partition
-    * sizing applied. Structured Streaming pins the state-store
-    * partition count from spark.sql.shuffle.partitions at the first
-    * run against a fresh checkpoint, and each state partition carries
-    * its own store init + per-commit overhead — so the twins size it
-    * to the state (a handful of keys), not the CPU count. Round 13:
-    * the sizing moves off the shared session's conf (the former
-    * set/try/finally was visible to every concurrently-running query)
-    * onto a clone that owns the whole plan, readStream through drain;
-    * the memory-sink temp view registers in the clone, so callers
-    * must drain from the SAME session this returns. At fleet scale the
-    * knob would instead be sized to executors x cores.
+  /** The child session the twins run in: a clone of `s` with the
+    * streaming state-partition sizing applied. Structured Streaming
+    * pins the state-store partition count from
+    * spark.sql.shuffle.partitions at the first run against a fresh
+    * checkpoint, and each state partition carries its own store init +
+    * per-commit overhead — so the twins size it to the state (a handful
+    * of keys), not the CPU count. The sizing lives on the child, not on
+    * the shared session's conf, and the memory-sink temp view registers
+    * in the child, so callers must drain from the SAME session this
+    * returns.
+    *
+    * There is one child per (parent, partition count), held in a map
+    * keyed weakly on the parent. A clone per
+    * call left one session per stream for the garbage collector, and
+    * Spark's ArtifactManager cleanup of each collected session forks an
+    * `rm -rf` on the JDK's `Cleaner-0` thread, in whatever code runs
+    * next.
+    *
+    * Every call brings the child up to the parent's current state, as a
+    * fresh clone would be: the parent's runtime SQL confs, and its
+    * streaming listeners (StreamMicrobatchProfile's progress listener,
+    * any production metrics hook), which a child's own
+    * StreamingQueryManager would otherwise miss; a listener the parent
+    * removed is dropped from the child.
     */
-  private[streaming] def sized(s: SparkSession, parts: String)
-      : SparkSession = {
-    val ss = org.apache.spark.sql.graft.Bridge.cloneSession(s)
-    ss.conf.set("spark.sql.shuffle.partitions", parts)
-    // a clone gets its OWN StreamingQueryManager, so observability
-    // registered on the parent (StreamMicrobatchProfile's progress
-    // listener; any production metrics hook) would silently miss every
-    // sized twin's micro-batches — carry the parent's listeners over
-    val already = ss.streams.listListeners.toSet
-    s.streams.listListeners
-      .filterNot(already.contains)
-      .foreach(ss.streams.addListener)
-    ss
+  private[graft] def sized(s: SparkSession, parts: String)
+      : SparkSession = children.synchronized {
+    val child = children.computeIfAbsent(s, _ => mutable.Map.empty)
+      .getOrElseUpdate(parts,
+        org.apache.spark.sql.graft.Bridge.cloneSession(s))
+    val (pc, cc) = (s.conf.getAll, child.conf)
+    (cc.getAll.keySet -- pc.keySet).filter(cc.isModifiable).foreach(cc.unset)
+    pc.foreach { case (k, v) =>
+      if (cc.isModifiable(k) && !cc.getOption(k).contains(v)) cc.set(k, v) }
+    cc.set("spark.sql.shuffle.partitions", parts)
+    val want = s.streams.listListeners.toSet
+    val have = child.streams.listListeners.toSet
+    (have -- want).foreach(child.streams.removeListener)
+    (want -- have).foreach(child.streams.addListener)
+    child
   }
+
+  private val children =
+    new java.util.WeakHashMap[SparkSession, mutable.Map[String, SparkSession]]
 
   private def runId(): String = java.util.UUID.randomUUID().toString.take(8)
 

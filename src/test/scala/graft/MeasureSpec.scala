@@ -108,6 +108,21 @@ class MeasureSpec extends SparkSuite {
     } finally cleanup(dir)
   }
 
+  test("GitSha stamps the HEAD of the working directory's checkout") {
+    val repo = tmpDir("gitsha")
+    val cwd = sys.props("user.dir")
+    try {
+      System.setProperty("user.dir", repo)
+      assert(GitSha.resolve() == "unknown") // no .git at all
+      val heads = Paths.get(repo, ".git", "refs", "heads")
+      Files.createDirectories(heads)
+      Files.writeString(Paths.get(repo, ".git", "HEAD"),
+        "ref: refs/heads/main\n")
+      Files.writeString(heads.resolve("main"), "0123abcd\n")
+      assert(GitSha.resolve() == "0123abcd")
+    } finally { System.setProperty("user.dir", cwd); cleanup(repo) }
+  }
+
   test("only Measure reads the clock to time a query") {
     // Spelled in two parts so this file does not match itself.
     val call = "System" + ".nanoTime"

@@ -36,12 +36,21 @@ class QueryInventorySpec extends SparkSuite {
   }
 
   test("every query returns rows at sf0.001") {
-    val empties = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+    val runs = SparkEntry.queries.toSeq.sortBy(_._1).map {
       case (name, fn) =>
         val n = fn(spark, sf).count()
-        if (n == 0) Some(name) else None
+        // a second build: first-use memos (schema inference, cappedCount,
+        // the truth relation) stay out of the census
+        (name, n, jobsDuring(fn(spark, sf)))
     }
+    val empties = runs.collect { case (name, 0L, _) => name }
     assert(empties.isEmpty, s"queries with empty results: $empties")
+    // build-job census: the set of builders that launch a job
+    val building = runs.collect { case (name, _, jobs) if jobs > 0 => name }
+    assert(building == BuildJobAllowList,
+      s"builders that launch jobs: ${building.mkString(", ")}; new: " +
+        s"${building.diff(BuildJobAllowList)}; gone (shrink the list): " +
+        s"${BuildJobAllowList.diff(building)}")
   }
 
   test("MinHash LSH candidates equal exact n-gram Jaccard pairs") {
@@ -386,4 +395,37 @@ class QueryInventorySpec extends SparkSuite {
     assert(joined.nonEmpty && joined.forall(_ <= 16),
       s"hamming distances: ${joined.toSeq}")
   }
+
+  /** Builders that still run a Spark job while the DataFrame is built,
+    * sorted: the streaming twins (the stream runs in `Replay.drain`), the
+    * iterative loops, driver-side scalars, the truth relation's schema
+    * inference (`TextPipeline.ngramPairs`) and the kept checkpoints. It
+    * may only shrink.
+    */
+  private val BuildJobAllowList = Seq(
+    "q_assoc_rules", "q_basket_pairs", "q_blocking_eval", "q_bpe_train",
+    "q_bradley_terry", "q_ccnet_buckets", "q_cluster_bleed",
+    "q_corpus_pipeline", "q_cross_elasticity", "q_cross_lang_dups",
+    "q_cross_source_dups", "q_dataset_card", "q_dedup_canonical",
+    "q_dedup_cascade", "q_dedup_cluster", "q_dedup_incremental",
+    "q_dedup_ngram", "q_dedup_sweep", "q_dup_size_dist", "q_graph_bfs",
+    "q_graph_bridges", "q_graph_clustcoef", "q_graph_commonnbrs",
+    "q_graph_modularity", "q_graph_pref_attach", "q_graph_resource_alloc",
+    "q_graph_salton", "q_graph_triangle", "q_graph_wpath", "q_hurst_rs",
+    "q_item_cosine", "q_jaccard_hist", "q_kcenter_seed", "q_kcore_prune",
+    "q_linkage_weights", "q_louvain_step", "q_lsh_curve",
+    "q_memorization_risk", "q_minhash_eval", "q_mmr_diversify",
+    "q_negative_sample", "q_pca_power", "q_quality_ensemble",
+    "q_rfm_segment", "q_seasonal_sen", "q_select_coverage", "q_self_bleu",
+    "q_simhash_eval", "q_sink_partitioned", "q_soft_dedup",
+    "q_source_evolved", "q_split_leakage", "q_srp_pairs",
+    "q_streaming_anomaly", "q_streaming_bandindex", "q_streaming_binseg",
+    "q_streaming_bitmap", "q_streaming_cms", "q_streaming_dedup",
+    "q_streaming_dp", "q_streaming_ewma", "q_streaming_expect",
+    "q_streaming_funnel", "q_streaming_gapsweep", "q_streaming_hdr",
+    "q_streaming_hll", "q_streaming_image", "q_streaming_join",
+    "q_streaming_lagfeat", "q_streaming_late", "q_streaming_ohlc",
+    "q_streaming_pit", "q_streaming_rate", "q_streaming_reservoir",
+    "q_streaming_session", "q_streaming_sessionwin", "q_streaming_sprt",
+    "q_streaming_topk", "q_streaming_upsert", "q_survivorship")
 }

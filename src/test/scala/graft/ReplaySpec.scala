@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** The streaming twins' replay-and-sink harness, `streaming.Replay`: a
   * twin's run leaves nothing behind in the caller's session or on the
@@ -36,6 +37,31 @@ class ReplaySpec extends SparkSuite {
       assert(spark.streams.active.isEmpty, q)
       assert((checkpoints() -- before).isEmpty, q)
     }
+  }
+
+  test("the twins share one sized child session per partition count, " +
+    "kept in step with the parent's confs and listeners") {
+    val child = streaming.Replay.sized(spark, "2")
+    assert(streaming.Replay.sized(spark, "2") eq child)
+    assert(!(streaming.Replay.sized(spark, "3") eq child))
+    assert(child.conf.get("spark.sql.shuffle.partitions") == "2")
+    import StreamingQueryListener._
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    val key = "spark.sql.files.maxPartitionBytes"
+    spark.streams.addListener(listener)
+    spark.conf.set(key, "16k")
+    try {
+      val c = streaming.Replay.sized(spark, "2")
+      assert(c.streams.listListeners.contains(listener))
+      assert(c.conf.get(key) == "16k")
+    } finally { spark.streams.removeListener(listener); spark.conf.unset(key) }
+    val c = streaming.Replay.sized(spark, "2")
+    assert(!c.streams.listListeners.contains(listener))
+    assert(c.conf.get(key) == spark.conf.get(key))
   }
 
   test("the warm-up's streaming step leaves no sink view behind") {

@@ -52,6 +52,17 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
     * from a JFR recording of `jdk.ProcessStart`.
     */
   protected def processStartsDuring(body: => Unit): Seq[String] = {
+    // Spark deletes a garbage-collected session's artifact directory with
+    // an `rm -rf` on its cleaner thread, whenever the collector gets to
+    // it: collect first, until a collection starts nothing, so that
+    // sessions an earlier spec dropped are not charged to `body`.
+    Iterator.continually(recordProcessStarts {
+      System.gc(); Thread.sleep(200)
+    }).take(10).find(_.isEmpty)
+    recordProcessStarts(body)
+  }
+
+  private def recordProcessStarts(body: => Unit): Seq[String] = {
     val rec = new jdk.jfr.Recording()
     val file = java.nio.file.Files.createTempFile("process_starts", ".jfr")
     try {
